@@ -13,11 +13,10 @@ Spark translation of the reference's ``write()`` pipeline
   output file ``part-{pid:05d}.parquet`` (the reference writes
   uuid+time names, fastparquet/writer.py:1002 — we must not, or resume
   breaks);
-- each task also writes a JSON lineage manifest (input rows, bytes
-  in/out, per-column codec chosen, encode seconds) to
-  ``_manifests/part-{pid:05d}.json`` — the Iceberg-snapshot stand-in:
-  commit is the atomic rename of the manifest, resume is "skip
-  partitions whose manifest already exists".
+- each task commits its files and a JSON lineage manifest (input
+  rows, bytes in/out, per-column codec chosen, encode seconds) through
+  the shared task-commit protocol (engine/commit.py): resume skips
+  partitions whose manifest already exists.
 
 Iceberg mapping (so a real catalog can slot in without changing the
 job): one ``append_dataset`` generation == one Iceberg SNAPSHOT (the
@@ -40,52 +39,15 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-MANIFEST_DIR = "_manifests"
-_MAX_BUFFER_BYTES = 512 << 20  # byte cap on buffered rows per output file
-
-
-def _u_join(base: str, rel: str) -> str:
-    """Path join that preserves URI schemes (s3://... stays s3://...)."""
-    return base.rstrip("/") + "/" + rel
-
-MANIFEST_SCHEMA_JSON = {
-    "partition": "int", "file": "string", "rows": "long",
-    "input_bytes": "long", "output_bytes": "long", "encode_secs": "double",
-    "skipped": "boolean", "columns": "string",  # json {name: encoding}
-    "kernel_secs": "double",
-}
-
-
-def _manifest_struct():
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("partition", IntegerType()),
-        StructField("file", StringType()),
-        StructField("rows", LongType()),
-        StructField("input_bytes", LongType()),
-        StructField("output_bytes", LongType()),
-        StructField("encode_secs", DoubleType()),
-        StructField("kernel_secs", DoubleType()),
-        StructField("skipped", BooleanType()),
-        StructField("columns", StringType()),
-    ])
-
-
-def _arrow_manifest_batch(row: dict) -> pa.RecordBatch:
-    return pa.record_batch({
-        "partition": pa.array([row["partition"]], pa.int32()),
-        "file": pa.array([row["file"]]),
-        "rows": pa.array([row["rows"]], pa.int64()),
-        "input_bytes": pa.array([row["input_bytes"]], pa.int64()),
-        "output_bytes": pa.array([row["output_bytes"]], pa.int64()),
-        "encode_secs": pa.array([row["encode_secs"]], pa.float64()),
-        "kernel_secs": pa.array([row.get("kernel_secs", 0.0)], pa.float64()),
-        "skipped": pa.array([row["skipped"]], pa.bool_()),
-        "columns": pa.array([row["columns"]]),
-    })
+from fastparquet_spark.engine.commit import (
+    MANIFEST_DIR,  # noqa: F401  (re-exported)
+    Chunker,
+    TaskAttempt,
+    manifest_struct,
+    prepare_output,
+    run_task,
+    u_join,
+)
 
 
 # payload-ish columns are excluded from the salt hash: hashing the full
@@ -193,43 +155,11 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
     if layout == "hive" and not pcols:
         raise ValueError("hive layout needs at least one partition column")
 
-    from fastparquet_spark.io import get_fs
-
-    drv_fs = get_fs(out_dir)
-    drv_fs.makedirs(out_dir)
-    drv_fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
-    # a pre-existing _metadata sidecar cannot see the files this job is
-    # about to add — drop it so footer-only readers fall back to the
-    # footer walk instead of silently missing new data; append_dataset
-    # re-merges it (incrementally) after the job commits
-    for name in ("_metadata", "_common_metadata"):
-        sidecar = _u_join(out_dir, name)
-        if drv_fs.exists(sidecar):
-            drv_fs.remove(sidecar)
-
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism, 1)
-    # resume identity is the PARTITION ID: a re-run with a different
-    # num_partitions (e.g. resuming on a different-sized cluster with
-    # the defaultParallelism default) assigns DIFFERENT rows to the
-    # pids whose manifests exist — silent data loss.  The first run
-    # records its plan; resumes must match it.
-    plan_marker = _u_join(out_dir, f"{MANIFEST_DIR}/_plan_{file_prefix}.json")
-    if resume and drv_fs.exists(plan_marker):
-        with drv_fs.open_read(plan_marker) as fh:
-            prev = json.loads(fh.read())
-        if prev.get("num_partitions") != num_partitions:
-            raise ValueError(
-                f"resume with num_partitions={num_partitions} but the "
-                f"interrupted run used {prev.get('num_partitions')} — "
-                f"pass num_partitions={prev.get('num_partitions')} "
-                f"explicitly, or resume=False to start over")
-    else:
-        tmp = f"{plan_marker}.tmp"
-        with drv_fs.open_write(tmp) as fh:
-            fh.write(json.dumps(
-                {"num_partitions": num_partitions}).encode())
-        drv_fs.replace(tmp, plan_marker)
+    # append_dataset re-merges the dropped sidecar after the job commits
+    prepare_output(out_dir, file_prefix, {"num_partitions": num_partitions},
+                   resume, "num_partitions")
     work = _salted(df, partition_cols, salt_rows, num_partitions)
     sort_cols = [c for c in (sort_within or ()) if c in df.columns]
     if layout == "hive":
@@ -239,7 +169,6 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
     if sort_cols:
         work = work.sortWithinPartitions(*sort_cols)
 
-    schema = _manifest_struct()
     compression_ = compression
     encodings_ = encodings
     bloom_ = bloom_filters
@@ -262,21 +191,11 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
         pa_w.set_cpu_count(1)  # see file_job.run: avoid pool oversubscription
 
-        fs = get_fs(out_dir_)  # same seam as the driver: URIs work end to end
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        fname = f"{file_prefix_}-{pid:05d}.parquet"
-        mpath = _u_join(out_dir_, f"{MANIFEST_DIR}/{file_prefix_}-{pid:05d}.json")
-        if resume_ and fs.exists(mpath):
-            # checkpoint hit: partition already committed -> skip
-            with fs.open_read(mpath) as fh:
-                prev = json.loads(fh.read())
-            for row in prev if isinstance(prev, list) else [prev]:
-                row["skipped"] = True
-                yield _arrow_manifest_batch(row)
-            return
-
-        t0 = time.perf_counter()
+        pid = ctx.partitionId()
+        me = f"{file_prefix_}-{pid:05d}"
+        # same fs seam as the driver: URIs work end to end
+        att = TaskAttempt(get_fs(out_dir_), out_dir_, me, ctx.taskAttemptId())
         kernel_secs = 0.0
 
         class _Out:
@@ -284,17 +203,7 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
             def __init__(self, rel: str, schema_: pa.Schema):
                 self.rel = rel
-                self.final = _u_join(out_dir_, rel)
-                if "/" in rel:
-                    fs.makedirs(self.final.rsplit("/", 1)[0])
-                # attempt-suffixed, DOT-HIDDEN stage name: a failed or
-                # speculative attempt never publishes anything under a
-                # final name, twin attempts can't collide on the stage
-                # file, and Spark/Hive readers (which skip '.'/'_'
-                # basenames) can't see in-flight data
-                d, b = self.final.rsplit("/", 1)
-                self.tmp = f"{d}/.{b}.stage-{attempt}"
-                self.sink = fs.open_write(self.tmp)
+                self.sink = att.stage(u_join(out_dir_, rel))
                 self.writer = ParquetWriter(self.sink, schema_,
                                             compression=compression_,
                                             encodings=encodings_,
@@ -302,53 +211,26 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                                             page_rows=page_rows_,
                                             compat=compat_,
                                             sorting_columns=list(sort_cols_))
-                self.buf: list[pa.Table] = []
-                self.buf_rows = 0
-                self.buf_bytes = 0
+                self.chunks = Chunker(row_group_rows_)
                 self.rows = 0
                 self.in_bytes = 0
 
             def add(self, tbl: pa.Table):
-                self.buf.append(tbl)
-                self.buf_rows += tbl.num_rows
-                self.buf_bytes += tbl.nbytes
                 self.rows += tbl.num_rows
                 self.in_bytes += tbl.nbytes
-                if self.buf_rows >= row_group_rows_:
-                    self.flush()
-                elif self.buf_bytes >= _MAX_BUFFER_BYTES:
-                    # fat rows: bytes cap the buffer before the row cap
-                    # does — emit a short row group rather than grow
-                    self.flush(final=True)
+                self._write(self.chunks.push(tbl))
 
-            def flush(self, final: bool = False):
+            def _write(self, groups: list):
                 nonlocal kernel_secs
-                if not self.buf_rows:
-                    return
-                tbl = pa.concat_tables(self.buf)
-                n = tbl.num_rows
-                # emit only FULL row groups; the remainder stays buffered so
-                # steady-state groups are uniformly row_group_rows wide
-                end = n if final else (n // row_group_rows_) * row_group_rows_
                 k0 = time.perf_counter()
-                for start in range(0, end, row_group_rows_):
-                    self.writer.write_row_group(tbl.slice(start, row_group_rows_))
+                for g in groups:
+                    self.writer.write_row_group(g)
                 kernel_secs += time.perf_counter() - k0
-                if end < n:
-                    self.buf, self.buf_rows = [tbl.slice(end)], n - end
-                    self.buf_bytes = self.buf[0].nbytes
-                else:
-                    self.buf, self.buf_rows, self.buf_bytes = [], 0, 0
 
             def finish(self) -> dict:
-                # close the sink but do NOT publish: all of this task's
-                # files are renamed together at task commit, just before
-                # the manifest write — a task that dies mid-way leaves
-                # only .stage-N garbage, never committed-looking data
-                self.flush(final=True)
+                self._write(self.chunks.flush())
                 res = self.writer.close()
                 self.sink.close()
-                pending.append((self.tmp, self.final))
                 cols = {c.name: c.encoding for c in res.columns}
                 return {"partition": pid, "file": self.rel, "rows": self.rows,
                         "input_bytes": self.in_bytes,
@@ -356,24 +238,17 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         "encode_secs": 0.0, "kernel_secs": 0.0,
                         "skipped": False, "columns": json.dumps(cols)}
 
-            def abort(self):
-                try:
-                    self.sink.close()
-                finally:
-                    if fs.exists(self.tmp):
-                        fs.remove(self.tmp)
-
-        outs: dict[tuple, _Out] = {}
-        done_rows: list[dict] = []
-        pending: list[tuple[str, str]] = []  # (staged, final) publish queue
-        seqs: dict[tuple, int] = {}  # files already closed per key
-        try:
+        def encode(_att) -> list[dict]:
+            t0 = time.perf_counter()
+            outs: dict[tuple, _Out] = {}
+            done_rows: list[dict] = []
+            seqs: dict[tuple, int] = {}  # files already closed per key
             for b in batches:
                 tbl = pa.Table.from_batches([b])
                 if layout_ == "flat":
                     out = outs.get(())
                     if out is None:
-                        out = outs[()] = _Out(fname, tbl.schema)
+                        out = outs[()] = _Out(f"{me}.parquet", tbl.schema)
                     out.add(tbl)
                     continue
                 # hive: split the batch by partition-key combination
@@ -409,8 +284,8 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         # didn't cluster them) get a sequence suffix so
                         # the earlier published file is never clobbered
                         seq = seqs.get(key, 0)
-                        base = fname if seq == 0 else \
-                            f"{file_prefix_}-{pid:05d}-r{seq}.parquet"
+                        base = f"{me}.parquet" if seq == 0 else \
+                            f"{me}-r{seq}.parquet"
                         rel = f"{_hive_dir(pcols_, key)}/{base}"
                         out = outs[key] = _Out(rel, data_schema)
                     out.add(part)
@@ -421,68 +296,16 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                 for key in [k for k in outs if k not in batch_keys]:
                     seqs[key] = seqs.get(key, 0) + 1
                     done_rows.append(outs.pop(key).finish())
-            if not outs and not done_rows:
-                return  # empty partition: nothing to commit
-            for out in outs.values():
-                done_rows.append(out.finish())
+            done_rows += [out.finish() for out in outs.values()]
             total_secs = time.perf_counter() - t0
             for row in done_rows:
                 row["encode_secs"] = total_secs
                 row["kernel_secs"] = kernel_secs
-            # task commit: (1) publish ALL staged files (atomic per
-            # file), (2) sweep stale finals/stages this partition id
-            # left in any touched hive dir from a dead attempt (batch
-            # boundaries after a shuffle are not deterministic, so the
-            # old attempt's -rN split may not be reproduced), (3) write
-            # the manifest marker.  Publish-FIRST ordering:
-            # sweeping before publishing let two simultaneous twins
-            # delete each other's in-flight stages and leave ZERO
-            # finals, and a zombie's sweep could remove a committed
-            # -rN file while that attempt's manifest still claimed it —
-            # now any destruction happens only after OUR complete set
-            # is on disk, and a swept twin's failed rename (final
-            # already present) reads as success, not data loss.
-            finals = {f for _t, f in pending}
-            staged = {t for t, _f in pending}
-            for tmp, final in pending:
-                try:
-                    fs.replace(tmp, final)  # atomic per file
-                except OSError:
-                    if not fs.exists(final):
-                        raise
-            if layout_ == "hive":
-                me = f"{file_prefix_}-{pid:05d}"
-                for d in sorted({f.rsplit("/", 1)[0] for f in finals}):
-                    for p in fs.listdir(d):
-                        base = p.rsplit("/", 1)[1]
-                        core = base[1:] if base.startswith(".") else base
-                        if (p not in finals and p not in staged
-                                and (core.startswith(me + ".")
-                                     or core.startswith(me + "-r"))):
-                            try:
-                                fs.remove(p)  # dead attempt's leftover
-                            except OSError:
-                                pass
-            # manifest written AFTER all data files: its existence == commit
-            payload = done_rows[0] if (layout_ == "flat" and len(done_rows) == 1) \
-                else done_rows
-            with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                fh.write(json.dumps(payload).encode())
-            fs.replace(f"{mpath}.tmp-{attempt}", mpath)
-            for row in done_rows:
-                yield _arrow_manifest_batch(row)
-        except BaseException:
-            for out in outs.values():
-                out.abort()
-            for staged, _final in pending:
-                try:
-                    if fs.exists(staged):
-                        fs.remove(staged)
-                except OSError:
-                    pass
-            raise
+            return done_rows
 
-    return work.mapInArrow(encode_partition, schema)
+        yield from run_task(att, resume_, encode)
+
+    return work.mapInArrow(encode_partition, manifest_struct())
 
 
 def append_dataset(spark, df, out_dir: str, **kwargs):
@@ -560,7 +383,7 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
         # a valid sidecar proves the last append COMPLETED: any marker
         # still on disk is stale (removal raced/failed) and must not
         # trigger a resume-decrement in a later crash chain
-        for p in fs.glob(_u_join(out_dir, "_g*_INPROGRESS")):
+        for p in fs.glob(u_join(out_dir, "_g*_INPROGRESS")):
             try:
                 fs.remove(p)
             except OSError:
@@ -578,9 +401,9 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     gen = max(gens)
     resume = kwargs.get("resume", True)
     if (resume and gen > 1 and old_sidecar is None
-            and fs.exists(_u_join(out_dir, f"_g{gen - 1:03d}_INPROGRESS"))):
+            and fs.exists(u_join(out_dir, f"_g{gen - 1:03d}_INPROGRESS"))):
         gen -= 1  # resume the provably interrupted generation
-    marker = _u_join(out_dir, f"_g{gen:03d}_INPROGRESS")
+    marker = u_join(out_dir, f"_g{gen:03d}_INPROGRESS")
     with fs.open_write(marker) as fh:
         fh.write(b"")
     rows = encode_dataset(spark, df, out_dir,

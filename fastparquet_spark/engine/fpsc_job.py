@@ -17,13 +17,46 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from fastparquet_spark.engine.encode_job import (
-    MANIFEST_DIR,
-    _arrow_manifest_batch,
-    _manifest_struct,
-    _salted,
-    _u_join,
+from fastparquet_spark.engine.commit import (
+    TaskAttempt,
+    manifest_struct,
+    prepare_output,
+    rechunk,
+    run_task,
+    u_join,
 )
+from fastparquet_spark.engine.encode_job import _salted
+
+
+def pretrain_fpsc(sample: pa.Table, compression: str) -> tuple[dict, dict]:
+    """Driver-side FSST pretraining on a small sample: one pass trains a
+    symbol table per string column AND fixes fsst-vs-plain per column,
+    so tasks skip training and the losing codec's full trial.  The
+    escape byte keeps bytes unseen in the sample correct; only the ratio
+    can drift.  Returns (tables, decisions) for :func:`fpsc_writer`."""
+    from fastparquet_spark.format.container import decide_string_codecs
+
+    tables: dict = {}
+    return tables, decide_string_codecs(sample, tables,
+                                        compression=compression)
+
+
+def fpsc_writer(compression: str, bloom_filters: dict | None,
+                pretrained: dict, decisions: dict | None):
+    """One task's container write function ``(sink, table) -> {column:
+    codec}``.  Columns without a pretrained table train one on their
+    first container and keep it for the task's later containers."""
+    from fastparquet_spark.format.container import write_container
+
+    cache = dict(pretrained)
+
+    def write(sink, tbl: pa.Table) -> dict:
+        blocks = write_container(sink, tbl, compression=compression,
+                                 fsst_cache=cache, bloom_filters=bloom_filters,
+                                 codec_decisions=decisions)
+        return {b.name: b.codec for b in blocks}
+
+    return write
 
 
 def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
@@ -40,35 +73,23 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
     FSST training is the expensive half of the string codec, and paying
     it once PER TASK dominated small-task encodes (~0.7s of a 0.9s
-    task).  With ``pretrain_rows`` > 0 the driver trains one symbol
-    table per string column on a small sample and ships the tables to
-    every task through the closure — tasks skip training entirely (the
-    escape byte keeps unseen bytes correct; only the ratio could drift,
-    and the per-column best-of vs plain still gates admission).  Set 0
-    to restore per-task training.
+    task).  With ``pretrain_rows`` > 0 the driver trains the tables on a
+    ``pretrain_rows`` sample (:func:`pretrain_fpsc`) and ships them to
+    every task through the closure.  Set 0 to restore per-task training.
 
     All IO goes through the ``io.get_fs`` seam, so ``out_dir`` may be a
     ``file://``/``s3://``-style URI like every other engine path."""
-    from fastparquet_spark.io import get_fs
-
-    drv_fs = get_fs(out_dir)
-    drv_fs.makedirs(out_dir)
-    drv_fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism, 1)
+    prepare_output(out_dir, "part", {"num_partitions": num_partitions},
+                   resume, "num_partitions")
     work = _salted(df, partition_cols, salt_rows, num_partitions)
 
     pretrained: dict = {}
     decisions: dict = {}
     if pretrain_rows:
-        from fastparquet_spark.format.container import decide_string_codecs
-
-        sample = df.limit(pretrain_rows).toArrow()
-        # one driver pass trains FSST tables AND fixes fsst-vs-plain per
-        # string column, so tasks skip the losing codec's full trial
-        # (file_job.encode_files_fpsc has the identical step)
-        decisions = decide_string_codecs(sample, pretrained,
-                                         compression=compression)
+        pretrained, decisions = pretrain_fpsc(
+            df.limit(pretrain_rows).toArrow(), compression)
 
     out_dir_ = out_dir
     compression_ = compression
@@ -82,117 +103,38 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
         import pyarrow as pa_w
         from pyspark import TaskContext
 
-        from fastparquet_spark.engine.file_job import _stage_name
-        from fastparquet_spark.format.container import write_container
         from fastparquet_spark.io import get_fs
 
         pa_w.set_cpu_count(1)
-        fs = get_fs(out_dir_)
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        mpath = _u_join(out_dir_, f"{MANIFEST_DIR}/part-{pid:05d}.json")
-        if resume_ and fs.exists(mpath):
-            with fs.open_read(mpath) as fh:
-                prev = json.loads(fh.read())
-            for row in prev if isinstance(prev, list) else [prev]:
-                row["skipped"] = True
-                yield _arrow_manifest_batch(row)
-            return
+        pid = ctx.partitionId()
+        att = TaskAttempt(get_fs(out_dir_), out_dir_, f"part-{pid:05d}",
+                          ctx.taskAttemptId())
 
-        fsst_cache: dict = dict(pretrained_)  # driver-trained tables
-        done_rows: list[dict] = []
-        pending: list[tuple[str, str]] = []  # (staged, final)
-        buf: list[pa.RecordBatch] = []
-        buf_rows = 0
-        task_start = time.perf_counter()
-
-        def write_one(tbl: pa.Table):
-            # STAGE only — all containers publish together at task
-            # commit, so a failed/racing attempt never leaves a partial
-            # final-named set that read_fpsc (which lists *.fpsc,
-            # manifest-blind) would read
-            k = len(done_rows)
-            fname = f"part-{pid:05d}-{k:03d}.fpsc"
-            fpath = _u_join(out_dir_, fname)
-            tmp = _stage_name(fpath, attempt)
-            t0 = time.perf_counter()
-            with fs.open_write(tmp) as sink:
-                blocks = write_container(sink, tbl,
-                                         compression=compression_,
-                                         fsst_cache=fsst_cache,
-                                         bloom_filters=bloom_,
-                                         codec_decisions=decisions_)
-            kernel = time.perf_counter() - t0
-            pending.append((tmp, fpath))
-            done_rows.append(
-                {"partition": pid, "file": fname, "rows": tbl.num_rows,
-                 "input_bytes": tbl.nbytes,
-                 "output_bytes": fs.size(tmp),
-                 "encode_secs": 0.0, "kernel_secs": kernel,
-                 "skipped": False,
-                 "columns": json.dumps({b.name: b.codec for b in blocks})})
-
-        def flush_chunk(final: bool = False):
-            nonlocal buf, buf_rows
-            if not buf_rows:
-                return
-            tbl = pa.Table.from_batches(buf)
-            n = tbl.num_rows
-            end = n if final else (n // rows_per_) * rows_per_
-            for start in range(0, end, rows_per_):
-                write_one(tbl.slice(start, rows_per_))
-            if end < n:
-                buf, buf_rows = tbl.slice(end).to_batches(), n - end
-            else:
-                buf, buf_rows = [], 0  # release buffered batches
-
-        try:
-            for b in batches:
-                buf.append(b)
-                buf_rows += b.num_rows
-                if buf_rows >= rows_per_:
-                    flush_chunk()
-            flush_chunk(final=True)
-            if not done_rows:
-                return
-            # task commit: publish the COMPLETE container set first
-            # (each rename atomic; a swept stage with the final present
-            # means a twin already published a complete file), then
-            # sweep a dead twin's extra-index finals, then the manifest
-            for tmp, fpath in pending:
-                try:
-                    fs.replace(tmp, fpath)
-                except OSError:
-                    if not fs.exists(fpath):
-                        raise
-            finals = {f for _t, f in pending}
-            me = f"part-{pid:05d}-"
-            for pth in fs.listdir(out_dir_):
-                base = pth.rsplit("/", 1)[1]
-                if base.startswith(me) and base.endswith(".fpsc") \
-                        and pth not in finals:
-                    try:
-                        fs.remove(pth)
-                    except OSError:
-                        pass
+        def encode(att) -> list[dict]:
+            write = fpsc_writer(compression_, bloom_, pretrained_, decisions_)
+            task_start = time.perf_counter()
+            rows: list[dict] = []
+            for tbl in rechunk(batches, rows_per_):
+                fname = f"part-{pid:05d}-{len(rows):03d}.fpsc"
+                t0 = time.perf_counter()
+                with att.stage(u_join(out_dir_, fname)) as sink:
+                    cols = write(sink, tbl)
+                    out_bytes = sink.tell()
+                rows.append(
+                    {"partition": pid, "file": fname, "rows": tbl.num_rows,
+                     "input_bytes": tbl.nbytes, "output_bytes": out_bytes,
+                     "encode_secs": 0.0,
+                     "kernel_secs": time.perf_counter() - t0,
+                     "skipped": False, "columns": json.dumps(cols)})
             total = time.perf_counter() - task_start
-            for row in done_rows:
+            for row in rows:
                 row["encode_secs"] = total
-            with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                fh.write(json.dumps(done_rows).encode())
-            fs.replace(f"{mpath}.tmp-{attempt}", mpath)
-            for row in done_rows:
-                yield _arrow_manifest_batch(row)
-        except BaseException:
-            for tmp, _f in pending:
-                try:
-                    if fs.exists(tmp):
-                        fs.remove(tmp)
-                except OSError:
-                    pass
-            raise
+            return rows
 
-    return work.mapInArrow(run, _manifest_struct())
+        yield from run_task(att, resume_, encode)
+
+    return work.mapInArrow(run, manifest_struct())
 
 
 def read_fpsc(spark, in_dir: str, schema=None, columns=None):

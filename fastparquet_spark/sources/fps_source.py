@@ -33,19 +33,15 @@ The Python Data Source API has no column-pruning hook yet; pass
 end, partition columns appended last (Spark's convention).
 
 Write side (``df.write.format("fps").save(dir)``): each task streams
-its Arrow batches through ``format.writer.write_file`` into one
-staged ``part-<job>-<pid>.parquet`` per task attempt; ``commit``
-renames the one successful attempt per task to its deterministic
-final name and sweeps stale stages (the engine's twin-safe
-publish-first protocol), then re-merges the ``_metadata`` /
-``_common_metadata`` sidecars so footer-only readers see the new
-files in one fetch.
+its Arrow batches through ``format.writer.ParquetWriter`` into one
+``part-<job>-<pid>.parquet`` committed by the engine's task-commit
+protocol (engine/commit.py); the driver then re-merges the
+``_metadata`` / ``_common_metadata`` sidecars so footer-only readers
+see the new files in one fetch.
 """
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -237,16 +233,12 @@ class FpsReader(DataSourceReader):
                 header["part_cols"], aschema, exact=False)
 
 
-@dataclass
-class _Committed(WriterCommitMessage):
-    files: tuple = ()  # (staged_rel, final_rel) pairs
-
-
 class FpsWriter(DataSourceArrowWriter):
-    """Twin-safe staged commit, same protocol as the engine's file
-    jobs: tasks write ``.<final>.stage-<attempt>`` (dot-hidden, so no
-    reader or lister ever sees a partial file), the driver's ``commit``
-    renames exactly the winning attempt per task and sweeps the rest."""
+    """Tasks stage ``part-<job>-<pid>.parquet`` under the engine's
+    task-commit protocol (engine/commit.py); the driver's ``commit``
+    publishes every task's file, removes the replaced files in
+    overwrite mode, and re-merges the sidecars.  The job token, minted
+    once on the driver, scopes the sweep to this job's files."""
 
     def __init__(self, path: str, compression: str, row_group_rows: int,
                  overwrite: bool):
@@ -258,13 +250,13 @@ class FpsWriter(DataSourceArrowWriter):
         self.overwrite = overwrite
         self.job = uuid.uuid4().hex[:8]
 
-    def _full(self, rel: str) -> str:
-        return self.path.rstrip("/") + "/" + rel
-
-    def write(self, iterator: Iterator) -> _Committed:
+    def write(self, iterator: Iterator) -> WriterCommitMessage:
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from fastparquet_spark.engine.commit import (
+            Staged, TaskAttempt, rechunk, u_join,
+        )
         from fastparquet_spark.format.writer import ParquetWriter
         from fastparquet_spark.io import get_fs
 
@@ -272,92 +264,35 @@ class FpsWriter(DataSourceArrowWriter):
         fs = get_fs(self.path)
         fs.makedirs(self.path)
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        final = f"part-{self.job}-{pid:05d}.parquet"
-        staged = f".{final}.stage-{attempt}"
-        # STREAM batches into row groups — memory is bounded by one row
-        # group, never the whole task partition (a multi-GB partition
-        # must not be buffered as a single Table before writing)
-        writer = None
-        out = None
-        buf: list = []
-        buffered = 0
+        owner = f"part-{self.job}-{ctx.partitionId():05d}"
+        att = TaskAttempt(fs, self.path, owner, ctx.taskAttemptId())
+        writer = sink = None
         try:
-            for b in iterator:
-                if b.num_rows == 0:
-                    continue
+            # streamed: memory is bounded by one row group, never the
+            # whole task partition
+            for tbl in rechunk(iterator, self.row_group_rows):
                 if writer is None:
-                    out = fs.open_write(self._full(staged))
-                    writer = ParquetWriter(out, b.schema,
+                    sink = att.stage(u_join(self.path, f"{owner}.parquet"))
+                    writer = ParquetWriter(sink, tbl.schema,
                                            compression=self.compression)
-                # slice incoming batches so row groups honor
-                # row_group_rows even when Spark hands one huge batch
-                while buffered + b.num_rows >= self.row_group_rows:
-                    take = self.row_group_rows - buffered
-                    buf.append(b.slice(0, take))
-                    writer.write_row_group(pa.Table.from_batches(buf))
-                    buf, buffered = [], 0
-                    b = b.slice(take)
-                if b.num_rows:
-                    buf.append(b)
-                    buffered += b.num_rows
-            if writer is None:
-                return _Committed(())  # empty partition: no file
-            if buf:
-                writer.write_row_group(pa.Table.from_batches(buf))
-            writer.close()
-            out.close()
+                writer.write_row_group(tbl)
+            if writer is not None:  # None: empty partition, no file
+                writer.close()
+                sink.close()
         except BaseException:
-            try:
-                if out is not None:
-                    out.close()
-                if fs.exists(self._full(staged)):
-                    fs.remove(self._full(staged))
-            except OSError:
-                pass
+            att.abort()
             raise
-        return _Committed(((staged, final),))
+        return Staged(tuple(att.pending))
 
     def commit(self, messages):
-        from fastparquet_spark.io import get_fs
-
-        import os as _os
-
-        fs = get_fs(self.path)
-        root = self.path.rstrip("/")
-        if self.overwrite:
-            # walk, not a root-level glob: hive-layout data lives in
-            # key=value subdirectories and surviving files would be
-            # swept back into the new sidecar
-            for p in fs.walk_files(root):
-                base = _os.path.basename(p)
-                if p.endswith(".parquet") and not base.startswith("."):
-                    fs.remove(p)
-            for name in ("_metadata", "_common_metadata"):
-                if fs.exists(f"{root}/{name}"):
-                    fs.remove(f"{root}/{name}")
-        for msg in messages:
-            for staged, final in msg.files:
-                fs.replace(self._full(staged), self._full(final))
-        # sweep stale stages from failed/speculative attempts
-        for p in fs.glob(f"{root}/.part-{self.job}-*.stage-*"):
-            try:
-                fs.remove(p)
-            except OSError:
-                pass
+        from fastparquet_spark.engine.commit import commit_job
         from fastparquet_spark.format.dataset import write_metadata_sidecar
 
+        commit_job(self.path, f"part-{self.job}", messages,
+                   ".parquet" if self.overwrite else None)
         write_metadata_sidecar(self.path)
 
     def abort(self, messages):
-        from fastparquet_spark.io import get_fs
+        from fastparquet_spark.engine.commit import abort_job
 
-        fs = get_fs(self.path)
-        for msg in messages:
-            if msg is None:
-                continue
-            for staged, _final in msg.files:
-                try:
-                    fs.remove(self._full(staged))
-                except OSError:
-                    pass
+        abort_job(self.path, f"part-{self.job}", messages)

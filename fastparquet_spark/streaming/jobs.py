@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from fastparquet_spark.engine.encode_job import _u_join
+from fastparquet_spark.engine.commit import u_join
 
 
 def encode_stream(spark, stream_df, out_dir: str, checkpoint_dir: str, *,
@@ -32,7 +32,7 @@ def encode_stream(spark, stream_df, out_dir: str, checkpoint_dir: str, *,
     get_fs(out_dir).makedirs(out_dir)  # fs seam: URI sinks work too
 
     def handle(batch_df, epoch_id: int):
-        epoch_dir = _u_join(out_dir, f"epoch={epoch_id:08d}")
+        epoch_dir = u_join(out_dir, f"epoch={epoch_id:08d}")
         if fmt == "fpsc":
             encode_dataset_fpsc(batch_df.sparkSession, batch_df, epoch_dir,
                                 compression=compression,

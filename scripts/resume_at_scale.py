@@ -44,7 +44,7 @@ def main():
     in_dir = tempfile.mkdtemp(prefix="fps_resume_in_")
     os.link(src_file, os.path.join(in_dir, os.path.basename(src_file)))
 
-    from fastparquet_spark.engine.encode_job import MANIFEST_DIR
+    from fastparquet_spark.engine.commit import MANIFEST_DIR
     mdir = os.path.join(out, MANIFEST_DIR)
 
     import pyarrow.parquet as pq

@@ -167,6 +167,18 @@ def test_encode_files_modern_compat(spark, tmp_path):
     assert back.column("f").to_pylist() == t.column("f").to_pylist()
 
 
+def _commit_twin(fs, opath, aid, t):
+    """One attempt of a split's task commit: stage, publish, sweep."""
+    from fastparquet_spark.engine.commit import TaskAttempt
+    from fastparquet_spark.format.writer import write_file
+
+    att = TaskAttempt(fs, os.path.dirname(opath), "part-00000", aid)
+    with att.stage(opath) as sink:
+        write_file(sink, t, compression="SNAPPY")
+    att.publish_all()
+    att.sweep()
+
+
 def test_staged_commit_protocol(spark, src_dir, tmp_path):
     """r4 What's-wrong #1: stage files must be dot-hidden and
     attempt-suffixed; twin attempts of one split must not collide or
@@ -176,12 +188,7 @@ def test_staged_commit_protocol(spark, src_dir, tmp_path):
 
     import pyarrow as pa
 
-    from fastparquet_spark.engine.file_job import (
-        _publish,
-        _stage_name,
-        _sweep_stale_stages,
-    )
-    from fastparquet_spark.format.writer import write_file
+    from fastparquet_spark.engine.commit import stage_path
     from fastparquet_spark.io import LocalFS
 
     _materialize(spark, src_dir)
@@ -196,9 +203,7 @@ def test_staged_commit_protocol(spark, src_dir, tmp_path):
 
     def attempt(aid):
         try:
-            _publish(fs, lambda sink: write_file(sink, t,
-                                                 compression="SNAPPY"),
-                     opath, aid)
+            _commit_twin(fs, opath, aid, t)
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -217,14 +222,14 @@ def test_staged_commit_protocol(spark, src_dir, tmp_path):
 
     # stage names are dot-hidden + attempt-suffixed (Spark readers skip
     # '.'-prefixed basenames)
-    s = _stage_name(opath, 42)
+    s = stage_path(opath, 42)
     assert s.rsplit("/", 1)[1] == ".part-00000.parquet.stage-42"
 
     # a zombie attempt's stale stage is swept at commit
-    stale = _stage_name(opath, 99)
+    stale = stage_path(opath, 99)
     with open(stale, "wb") as fh:
         fh.write(b"partial")
-    _sweep_stale_stages(fs, opath, keep="nonexistent")
+    _commit_twin(fs, opath, 9, t)
     assert not os.path.exists(stale)
 
     # end-to-end: a full job leaves no non-committed visible files, and
@@ -265,8 +270,6 @@ def test_publish_three_twins_hammer(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from fastparquet_spark.engine.file_job import _publish
-    from fastparquet_spark.format.writer import write_file
     from fastparquet_spark.io import LocalFS
 
     fs = LocalFS()
@@ -279,8 +282,7 @@ def test_publish_three_twins_hammer(tmp_path):
 
         def attempt(aid):
             try:
-                _publish(fs, lambda sink: write_file(
-                    sink, t, compression="SNAPPY"), opath, aid)
+                _commit_twin(fs, opath, aid, t)
             except Exception as e:  # noqa: BLE001
                 errs.append(e)
 
