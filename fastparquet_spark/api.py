@@ -29,12 +29,19 @@ from typing import Any
 import pyarrow as pa
 
 from fastparquet_spark.format.dataset import (
-    _apply_row_filter_dnf,
     _iter_chunks,
+    _leaf_elems,
+    _partition_values,
+    _rg_stats,
     dataset_metadata,
+    detect_scheme,
 )
 from fastparquet_spark.format.dataset import (
     filter_row_groups as _meta_filter_row_groups,
+)
+from fastparquet_spark.format.predicate import (
+    arrow_filter, constant_stats, dnf, file_clauses, filter_in,
+    filter_not_in, filter_val, match_all, may_match,
 )
 from fastparquet_spark.format.reader import (
     _arrow_type,
@@ -73,14 +80,6 @@ def _hive_key(v) -> str:
 
     return ("__HIVE_DEFAULT_PARTITION__" if v is None
             else quote(str(v), safe=""))
-
-
-def _normalize_filters(filters):
-    if not filters:
-        return None
-    if isinstance(filters[0], tuple):
-        return [list(filters)]
-    return [list(c) for c in filters]
 
 
 class _SchemaHelper:
@@ -271,21 +270,16 @@ class ParquetFile:
     def count(self, filters=None, row_filter: bool = False) -> int:
         """Total rows; metadata-only unless both filters and row_filter
         are given (api.py:512-525)."""
-        filters = _normalize_filters(filters)
-        if filters and row_filter:
+        clauses = dnf(filters)
+        if match_all(clauses):
+            return self.count_total
+        if row_filter:
             return len(self.to_pandas(
-                columns=[self.columns[0]], filters=filters,
+                columns=[self.columns[0]], filters=clauses,
                 row_filter=True))
-        if filters:
-            keep = self._surviving(filters)
-            total = 0
-            for m in self._metas:
-                ris = keep.get(m["file"])
-                if ris:
-                    total += sum(m["fmd"]["row_groups"][ri]["num_rows"]
-                                 for ri in ris)
-            return total
-        return self.count_total
+        keep = self._surviving(clauses)
+        return sum(m["fmd"]["row_groups"][ri]["num_rows"]
+                   for m in self._metas for ri in keep.get(m["file"], []))
 
     @property
     def statistics(self) -> dict:
@@ -338,8 +332,6 @@ class ParquetFile:
         """Partition scheme label (reference attribute): ``simple``
         for one plain file, else ``flat``/``hive``/``drill``/``other``
         from the relative paths (api.py:700-758 detection)."""
-        from fastparquet_spark.format.dataset import detect_scheme
-
         rels = [m["file"] for m in self._metas]
         if len(rels) == 1 and "/" not in rels[0]:
             return "simple"
@@ -410,25 +402,19 @@ class ParquetFile:
         return keep
 
     def _tables(self, columns, filters, row_filter):
-        filters = _normalize_filters(filters)
+        clauses = dnf(filters)
         names = self.columns
         want = list(columns) if columns is not None else list(names)
         decode = list(want)
-        if filters and row_filter:
-            for clause in filters:
+        if row_filter:
+            for clause in clauses:
                 for col, _op, _v in clause:
                     if col in names and col not in decode:
                         decode.append(col)
-        keep = self._surviving(filters) if filters else None
-        from fastparquet_spark.engine.scan_job import (
-            _absent_clauses, _file_clauses,
-        )
+        keep = self._surviving(clauses)
 
         for m in self._metas:
-            if keep is None:
-                ris = list(range(len(m["fmd"]["row_groups"])))
-            else:
-                ris = sorted(keep.get(m["file"], []))
+            ris = sorted(keep.get(m["file"], []))
             if not ris:
                 continue
             present = self._present[m["file"]]
@@ -438,14 +424,10 @@ class ParquetFile:
             # without this, a partition clause on an unprojected column
             # degenerates to match-all in the residual filter); terms
             # on columns this file predates read as all-null
-            fclauses = filters
-            if filters:
-                fclauses = _file_clauses(filters,
-                                         m.get("partitions") or {})
-                if absent and fclauses:
-                    fclauses = _absent_clauses(fclauses, set(absent))
-                if not fclauses:
-                    continue
+            fclauses = file_clauses(clauses, {**dict.fromkeys(absent),
+                                              **(m.get("partitions") or {})})
+            if not fclauses:
+                continue
             file_cols = [c for c in decode
                          if c in names and c in present]
             pmap = m.get("partitions") or {}
@@ -478,8 +460,8 @@ class ParquetFile:
                 if not pcols:
                     continue
                 tbl = pa.table(pcols)
-            if filters and row_filter:
-                tbl = _apply_row_filter_dnf(tbl, fclauses)
+            if row_filter:
+                tbl = arrow_filter(tbl, fclauses)
                 tbl = tbl.select([c for c in tbl.column_names
                                   if c in want or c not in names])
             yield tbl
@@ -635,13 +617,9 @@ class ParquetFile:
     def iter_row_groups(self, filters=None, columns=None):
         """Yield one pandas DataFrame per surviving row group
         (api.py:321-337)."""
-        filters = _normalize_filters(filters)
-        keep = self._surviving(filters) if filters else None
+        keep = self._surviving(dnf(filters))
         for m in self._metas:
-            if keep is None:
-                ris = list(range(len(m["fmd"]["row_groups"])))
-            else:
-                ris = sorted(keep.get(m["file"], []))
+            ris = sorted(keep.get(m["file"], []))
             present = self._present[m["file"]]
             cols_here = columns if columns is None else \
                 [c for c in columns if c in present]
@@ -1079,13 +1057,16 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
                 # times can use the sentinel values NaN and NaT' —
                 # NaT is iNaT (int64 min) AS A VALUE in a REQUIRED
                 # time column, exactly like NaN in a float one.  The
-                # sentinel must be stamped in the STORED unit (us):
-                # a unit cast after filling would divide it into a
-                # non-sentinel number, so convert first (truncating
-                # like the reference), then fill.
-                target = pa.duration("us") \
-                    if pa.types.is_duration(f.type) \
-                    else pa.timestamp("us", tz=f.type.tz)
+                # sentinel must be stamped in the STORED unit (ns for
+                # times='int96', us otherwise): a unit cast after
+                # filling would scale it into a non-sentinel number, so
+                # convert first (truncating like the reference), then
+                # fill.
+                if pa.types.is_duration(f.type):
+                    target = pa.duration("us")
+                else:
+                    target = pa.timestamp(
+                        "ns" if times == "int96" else "us", tz=f.type.tz)
                 col = table.column(i)
                 if col.type != target:
                     col = pc.cast(col, options=pc.CastOptions(
@@ -1280,17 +1261,14 @@ def filter_row_groups(pf: ParquetFile, filters, as_idx: bool = False):
     global row-group positions (file order, groups in file order)
     instead of the row-group dicts.  Unknown filter columns raise, as
     the reference does."""
-    filters = _normalize_filters(filters)
+    clauses = dnf(filters)
     known = set(pf.columns) | set(pf.cats)
-    bad = {c for clause in (filters or []) for c, _op, _v in clause
+    bad = {c for clause in clauses for c, _op, _v in clause
            if c not in known}
     if bad:
         raise ValueError(
             f"No filter can be applied on nonexistent column(s) {bad}")
-    if not filters:
-        rgs = pf.row_groups
-        return list(range(len(rgs))) if as_idx else rgs
-    keep = pf._surviving(filters)
+    keep = pf._surviving(clauses)
     out, g = [], 0
     for m in pf._metas:
         rgs = m["fmd"]["row_groups"]
@@ -1327,148 +1305,33 @@ def sorted_partitioned_columns(pf: ParquetFile, filters=None) -> dict:
     return out
 
 
-def filter_val(op, val, vmin=None, vmax=None) -> bool:
-    """Can a row group whose column spans [vmin, vmax] be EXCLUDED by
-    ``col <op> val``?  True means "filter out" (reference
-    api.py:1042-1081 filter_val; '=' is accepted as '==').  ``in`` /
-    ``not in`` delegate to :func:`filter_in` / :func:`filter_not_in`.
-    A ``None`` bound means the stat is unknown on that side and can
-    never justify exclusion."""
-    if op == "in":
-        return filter_in(val, vmin, vmax)
-    if op == "not in":
-        return filter_not_in(val, vmin, vmax)
-    if vmax is not None:
-        if op in ("==", "=", ">=") and val > vmax:
-            return True
-        if op == ">" and val >= vmax:
-            return True
-    if vmin is not None:
-        if op in ("==", "=", "<=") and val < vmin:
-            return True
-        if op == "<" and val <= vmin:
-            return True
-    if (op == "!=" and vmax is not None and vmin is not None
-            and vmax == vmin and val == vmax):
-        return True
-    return False
-
-
-def filter_in(values, vmin=None, vmax=None) -> bool:
-    """Exclude a [vmin, vmax] row group for ``col in values``?  True
-    when no member of ``values`` can lie in the range (reference
-    api.py:1084-1113): empty value set excludes everything; a constant
-    group (vmin == vmax) excludes unless that constant is a member;
-    otherwise binary-search the sorted members against the range."""
-    import bisect
-
-    values = list(values)
-    if len(values) == 0:
-        return True
-    if vmax == vmin and vmax is not None and vmax not in values:
-        return True
-    if vmin is None and vmax is None:
-        return False
-    sv = sorted(values)
-    if vmin is None:
-        return sv[0] > vmax
-    if vmax is None:
-        return sv[-1] < vmin
-    return (bisect.bisect_left(sv, vmin)
-            == bisect.bisect_right(sv, vmax))
-
-
-def filter_not_in(values, vmin=None, vmax=None) -> bool:
-    """Exclude a [vmin, vmax] row group for ``col not in values``?
-    Only a CONSTANT group (vmin == vmax) whose single value is a member
-    can be excluded — any wider range may hold rows outside ``values``.
-    The reference (api.py:1116-1139) also drops groups when merely the
-    min OR the max is a member, which discards surviving rows; this
-    implementation keeps those groups (sound superset contract)."""
-    if len(list(values)) == 0:
-        return False
-    return (vmin is not None and vmax is not None
-            and vmin == vmax and vmin in values)
-
-
 def filter_out_stats(rg, filters, schema) -> bool:
     """Should row group ``rg`` (thrift-decoded dict) be excluded, per
     its column statistics and the AND-list ``filters`` of (col, op,
     val) tuples (reference api.py:761-820)?  ``schema`` is the footer
     schema element list (``fmd['schema']``) or a ``pf.schema`` helper.
-    Empty groups are always excluded; a filtered column whose chunk is
-    all-null excludes the group (no comparison can match)."""
-    from fastparquet_spark.format.dataset import _decode_stat, _leaf_elems
-
+    Empty groups are always excluded."""
     if rg["num_rows"] == 0:
         return True
     if not filters:
         return False
-    elems = _leaf_elems(schema if isinstance(schema, list)
-                        else schema.schema_elements)
-    for cc in rg["columns"]:
-        cmd = cc["meta_data"]
-        name = ".".join(cmd["path_in_schema"])
-        app = [(op, v) for c, op, v in filters if c == name]
-        if not app:
-            continue
-        st = cmd.get("statistics") or {}
-        if st.get("null_count") == cmd["num_values"]:
-            return True
-        elem = elems.get(name)
-        if elem is None:
-            continue
-        lo = _decode_stat(st.get("min_value") or st.get("min"),
-                          elem["type"], elem.get("converted_type"),
-                          elem.get("scale") or 0)
-        hi = _decode_stat(st.get("max_value") or st.get("max"),
-                          elem["type"], elem.get("converted_type"),
-                          elem.get("scale") or 0)
-        for op, val in app:
-            if filter_val(op, val, lo, hi):
-                return True
-    return False
-
-
-def _partition_coerce(raw: str, meta=None):
-    """Hive path value -> python value, honoring a pandas partition
-    meta dict (string-typed keys keep their raw text, the reference's
-    val_to_num(meta=) contract)."""
-    from fastparquet_spark.format.dataset import _coerce_partition_value
-
-    if meta:
-        t = str(meta.get("numpy_type") or meta.get("pandas_type") or "")
-        if t.startswith(("object", "str", "unicode", "bytes")):
-            return raw
-    return _coerce_partition_value(raw)
+    cols = _rg_stats(rg, _leaf_elems(schema if isinstance(schema, list)
+                                     else schema.schema_elements))
+    return not any(may_match(cols, c) for c in dnf(filters))
 
 
 def filter_out_cats(rg, filters, partition_meta=None) -> bool:
     """Should row group ``rg`` be excluded by its hive partition
     values, per the AND-list ``filters`` (reference api.py:1002-1039)?
     The partition pairs are parsed from the group's first chunk's
-    ``file_path``; each behaves as a constant column (vmin == vmax ==
-    value)."""
-    from urllib.parse import unquote
-
+    ``file_path``; each behaves as a constant column."""
     if not filters:
         return False
     fp = (rg.get("columns") or [{}])[0].get("file_path") or ""
-    partition_meta = partition_meta or {}
-    for seg in fp.split("/"):
-        if "=" not in seg:
-            continue
-        cat, _, raw = seg.partition("=")
-        app = [(op, v) for c, op, v in filters if c == cat]
-        if not app:
-            continue
-        v = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-             else _partition_coerce(unquote(raw),
-                                    partition_meta.get(cat)))
-        for op, val in app:
-            if filter_val(op, val, v, v):
-                return True
-    return False
+    cols = {k: constant_stats(v, rg["num_rows"])
+            for k, v in _partition_values(fp, "hive",
+                                          partition_meta).items()}
+    return not any(may_match(cols, c) for c in dnf(filters))
 
 
 def paths_to_cats(paths, partition_meta=None):
@@ -1479,9 +1342,6 @@ def paths_to_cats(paths, partition_meta=None):
     directories), ``other`` (unequal depths), ``hive`` (key=value
     segments) or ``drill`` (bare labels -> dir0..dirN)."""
     from collections import OrderedDict
-    from urllib.parse import unquote
-
-    from fastparquet_spark.format.dataset import detect_scheme
 
     paths = list(paths)
     if len(paths) == 0:
@@ -1491,18 +1351,9 @@ def paths_to_cats(paths, partition_meta=None):
     scheme = detect_scheme([p for p in paths if p])
     if scheme in ("flat", "other"):
         return scheme, {}
-    partition_meta = partition_meta or {}
     cats: "OrderedDict[str, set]" = OrderedDict()
     for p in paths:
-        segs = p.split("/")[:-1]
-        if scheme == "drill":
-            pairs = [(f"dir{i}", s) for i, s in enumerate(segs)]
-        else:
-            pairs = [tuple(s.split("=", 1)) for s in segs if "=" in s]
-        for k, raw in pairs:
-            v = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                 else _partition_coerce(unquote(raw),
-                                        partition_meta.get(k)))
+        for k, v in _partition_values(p, scheme, partition_meta).items():
             cats.setdefault(k, set()).add(v)
     return scheme, OrderedDict(
         (k, sorted(v, key=repr)) for k, v in cats.items())

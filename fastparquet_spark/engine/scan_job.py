@@ -25,73 +25,7 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-
-def _eval_partition_term(v, op, val) -> bool:
-    """Evaluate one predicate term against a file's constant partition
-    value (full OPS set; exact, since the value is a scalar).
-
-    When the partition COLUMN resolved to string (mixed spellings like
-    k=3 beside k=abc) the stored value is a str while the filter value
-    may be numeric — equality-class ops compare stringified (matching
-    the column's resolved type); ordering ops against an incomparable
-    type raise loudly instead of silently dropping the file."""
-    if op == "is_null":
-        return v is None
-    if op == "is_not_null":
-        return v is not None
-    if v is None:
-        return False
-    if isinstance(v, str) and not isinstance(val, str):
-        if op in ("==", "=", "!="):
-            val = str(val)
-        elif op in ("in", "not in"):
-            val = [x if isinstance(x, str) else str(x) for x in val]
-        elif isinstance(val, (int, float)):
-            raise ValueError(
-                f"cannot order-compare numeric filter value {val!r} "
-                f"against string-typed partition value {v!r} — the "
-                f"column resolved to string (mixed value spellings); "
-                f"pass a string bound")
-    if op in ("==", "="):
-        return v == val
-    if op == "!=":
-        return v != val
-    if op == "<":
-        return v < val
-    if op == "<=":
-        return v <= val
-    if op == ">":
-        return v > val
-    if op == ">=":
-        return v >= val
-    if op == "in":
-        return v in val
-    if op == "not in":
-        return v not in val
-    raise ValueError(f"unsupported filter op {op!r}")
-
-
-def _file_clauses(clauses, pvals: dict):
-    """Per-file DNF rewrite: partition terms are decided HERE against
-    the file's constant values — a clause whose partition term fails is
-    dropped for this file, a passing term is stripped (already true for
-    every row).  Returns the residual clauses; an empty residual clause
-    means 'every row of this file matches that branch'."""
-    out = []
-    for clause in clauses:
-        keep, resid = True, []
-        for col, op, val in clause:
-            if col in pvals:
-                if not _eval_partition_term(pvals[col], op, val):
-                    keep = False
-                    break
-            else:
-                # file column or unknown — the reader keeps rows for
-                # columns it cannot find (conservative)
-                resid.append((col, op, val))
-        if keep:
-            out.append(resid)
-    return out
+from fastparquet_spark.format.predicate import dnf, file_clauses, match_all
 
 
 def _logical_sig(lt):
@@ -192,27 +126,6 @@ def union_leaf_elems(metas):
     return order, elems, present
 
 
-def _absent_clauses(clauses, absent):
-    """Rewrite a DNF for a file LACKING the ``absent`` columns (schema
-    evolution: an absent column reads as all-null).  SQL three-valued
-    logic on null: ``is_null`` terms are always true (stripped); every
-    other term — including ``!=`` and ``not in`` — evaluates unknown
-    -> false, dropping that AND-branch for this file."""
-    out = []
-    for clause in clauses:
-        keep, resid = True, []
-        for col, op, val in clause:
-            if col in absent:
-                if op == "is_null":
-                    continue
-                keep = False
-                break
-            resid.append((col, op, val))
-        if keep:
-            out.append(resid)
-    return out
-
-
 def build_scan_units(by_file, metas, file_cols, names_all, present,
                      ptypes):
     """One (file, row_groups, pvals, absent, fallback) tuple per
@@ -248,14 +161,10 @@ def build_scan_units(by_file, metas, file_cols, names_all, present,
 
 def _unit_plan(pvals, absent, fallback, clauses, file_cols, drop_cols):
     """Shared head of the unit scanners: per-file DNF rewrite
-    (partition substitution + absent-column 3VL) and the projection for
-    THIS file.  Returns (fclauses, cols_here, drop_here) or None when
-    no DNF branch can match the file."""
-    fclauses = _file_clauses(clauses, pvals)
-    if absent and fclauses:
-        # schema evolution: terms on columns this file predates
-        # evaluate as all-null
-        fclauses = _absent_clauses(fclauses, set(absent))
+    (partition values, and all-null columns this file predates) and
+    the projection for THIS file.  Returns (fclauses, cols_here,
+    drop_here) or None when no DNF branch can match the file."""
+    fclauses = file_clauses(clauses, {**dict.fromkeys(absent), **pvals})
     if not fclauses:
         return None
     cols_here = [c for c in file_cols if c not in absent]
@@ -303,7 +212,7 @@ def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
     if plan is None:
         return None
     fclauses, cols_here, drop_here = plan
-    if any(not cl for cl in fclauses):
+    if match_all(fclauses):
         # match-all DNF for this file (no filter survived partition
         # substitution): ColumnIndex page skipping has nothing to skip,
         # so the pure-Python page reader only adds decode tax — read
@@ -346,7 +255,7 @@ def scan_unit_batches(path, ris, pvals, absent, fallback, clauses,
     if plan is None:
         return
     fclauses, cols_here, drop_here = plan
-    if any(not cl for cl in fclauses):
+    if match_all(fclauses):
         import pyarrow.parquet as pq
 
         from fastparquet_spark.io import _is_uri, get_fs
@@ -392,9 +301,7 @@ def _partition_arrow_type(values):
 
 def paged_read(spark, in_dir: str, filters, columns=None,
                exact: bool = True, fs=None):
-    """Spark DataFrame of the rows surviving ``filters`` (a DNF filter:
-    a flat AND-list ``[(col, op, val), ...]`` or OR-of-ANDs
-    ``[[...], [...]]`` — the reference's filter contract) under
+    """Spark DataFrame of the rows surviving the DNF ``filters`` under
     ``in_dir``, read through the three-tier pruning stack:
 
     1. driver: row-group stats + bloom pruning (``filter_row_groups``,
@@ -422,21 +329,13 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     from fastparquet_spark.format.reader import _arrow_type
     from fastparquet_spark.io import get_fs
 
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-
+    clauses = dnf(filters)
     fs = get_fs(in_dir, fs)
     in_dir, metas = load_dataset_metas(in_dir, fs=fs)
     # driver-side tier: stats + concurrent bloom pruning (partition
     # values participate as pseudo-stats, so a partition predicate
-    # prunes whole files here).  An empty filter list means SCAN ALL
-    # (filter_row_groups would read [] as an empty DNF -> no rows).
-    if not filters:
-        filters = [[]]
-        survivors = [(m["file"], ri) for m in metas
-                     for ri in range(len(m["fmd"]["row_groups"]))]
-    else:
-        survivors = filter_row_groups(in_dir, filters, fs=fs, metas=metas)
+    # prunes whole files here)
+    survivors = filter_row_groups(in_dir, clauses, fs=fs, metas=metas)
     by_file: dict[str, list[int]] = {}
     for f, ri in survivors:
         by_file.setdefault(f, []).append(ri)
@@ -494,7 +393,6 @@ def paged_read(spark, in_dir: str, filters, columns=None,
                          StructField("absent", StringType()),
                          StructField("fallback", StringType())]))
 
-    clauses_ = [list(c) for c in filters]
     file_cols_ = list(file_cols)
     drop_cols_ = list(drop_cols)
     part_cols_ = list(part_cols)
@@ -515,7 +413,7 @@ def paged_read(spark, in_dir: str, filters, columns=None,
                 ris = [int(x) for x in rgs.split(",")] if rgs else []
                 yield from scan_unit_batches(
                     path, ris, json.loads(pjson), json.loads(absjson),
-                    fallback, clauses_, file_cols_, drop_cols_,
+                    fallback, clauses, file_cols_, drop_cols_,
                     part_cols_, arrow_schema_, exact_)
 
     return paths_df.mapInArrow(scan, out_schema)

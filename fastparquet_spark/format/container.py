@@ -592,55 +592,39 @@ def _assemble(validity: np.ndarray, vals, cm: dict) -> pa.Array:
 
 def container_bloom_rules_out(path: str, meta: dict, clauses,
                               fs=None) -> bool:
-    """True iff a container bloom filter PROVES some ==/in clause term
-    cannot match any row of ``path`` (definite negative only).  The
-    bloom span is fetched with one ranged read; columns without a bloom
-    or non-point operators never rule anything out."""
+    """True iff a container bloom filter PROVES some ==/in term of the
+    AND-clause cannot match any row of ``path`` (definite negative
+    only).  Each bloom span is fetched with one ranged read; columns
+    without a bloom or non-point operators never rule anything out."""
     from fastparquet_spark.codecs.bloom import SplitBlockBloom, xxh64
+    from fastparquet_spark.format.dataset import _bloom_value_bytes
+    from fastparquet_spark.format.predicate import point_terms
     from fastparquet_spark.io import get_fs
 
     by_name = {cm["name"]: cm for cm in meta["columns"]}
-    wanted: dict[str, list] = {}
-    for col, op, val in clauses:
+    probes = []
+    for col, vals in point_terms(clauses):
         cm = by_name.get(col)
         if cm is None or "bloom_offset" not in cm:
             continue
-        if op in ("==", "="):
-            wanted.setdefault(col, []).append(val)
-        elif op == "in":
-            vs = wanted.setdefault(col, [])
-            vs.extend(val)
-    if not wanted:
+        # probe encoding shared with the parquet path, in the schema
+        # element the parquet writer maps this column's type to (UINT
+        # columns hash the unsigned byte layout); an unencodable value
+        # means "cannot rule out"
+        ptype, conv, _ = _map_type(_type_from_name(cm["arrow_type"]))
+        encoded = [_bloom_value_bytes(v, {"type": ptype,
+                                          "converted_type": conv})
+                   for v in vals]
+        if None not in encoded:
+            probes.append((cm, encoded))
+    if not probes:
         return False
     fs = get_fs(path, fs)
     with fs.open_read(path) as f:
-        for col, vals in wanted.items():
-            cm = by_name[col]
+        for cm, encoded in probes:
             f.seek(cm["bloom_offset"])
             bf = SplitBlockBloom.frombytes(f.read(cm["bloom_bytes"]))
-            # probe encoding shared with the parquet path: UINT columns
-            # hash the unsigned byte layout (the writer bit-reinterprets
-            # before hashing), and an out-of-range value means "cannot
-            # rule out", never an OverflowError crash
-            from fastparquet_spark.format.dataset import _bloom_value_bytes
-            from fastparquet_spark.format.metadata import ConvertedType
-
-            unsigned = str(cm.get("arrow_type", "")).startswith("uint")
-            elem = {"type": cm["ptype"],
-                    "converted_type": (ConvertedType.UINT_32
-                                       if cm["ptype"] == Type.INT32
-                                       else ConvertedType.UINT_64)
-                    if unsigned else None}
-            hashes = []
-            for v in vals:
-                b = _bloom_value_bytes(v, elem)
-                if b is None:
-                    hashes = None
-                    break
-                hashes.append(xxh64(b, 0))
-            if hashes is None:
-                continue
-            got = bf.might_contain(np.array(hashes, dtype=np.uint64))
-            if not got.any():
-                return True  # 'in' semantics: no sought value present
+            hashes = np.array([xxh64(e, 0) for e in encoded], dtype=np.uint64)
+            if not bf.might_contain(hashes).any():
+                return True  # no sought value present
     return False

@@ -11,14 +11,12 @@ Re-expresses the reference's metadata "query" surface
 - ``sorted_columns``      — columns whose row-group min/max chains are
                             globally non-overlapping in file order
                             (fastparquet/api.py:905-945);
-- ``filter_row_groups``   — DNF stats pruning ``[[(col,op,val),...],...]``
-                            (fastparquet/api.py:948-999, filter_out_stats
-                            :761-819, ops util.py:411-419);
+- ``filter_row_groups``   — stats + bloom pruning of a DNF filter
+                            (fastparquet/api.py:948-999);
 - ``filtered_read``       — Spark scan of only the surviving files, with
-                            the residual predicate applied (so results
-                            are exact, pruning is just I/O savings — the
-                            same contract as the reference's
-                            ``to_pandas(filters=...)``).
+                            the exact residual predicate applied.
+
+Filter semantics live in :mod:`fastparquet_spark.format.predicate`.
 
 At cluster scale this driver-side footer pass is exactly what an
 Iceberg manifest scan does; part files are listed once and only tails
@@ -32,17 +30,20 @@ import struct
 from typing import Any
 
 from fastparquet_spark.format.metadata import ConvertedType, Type
+from fastparquet_spark.format.predicate import (
+    arrow_filter, constant_stats, dnf, match_all, may_match, point_terms,
+    spark_column,
+)
 from fastparquet_spark.format.reader import read_footer, read_footer_tail
 from fastparquet_spark.io import fetch_footers, get_fs
 
-OPS = ("==", "=", "!=", "<", "<=", ">", ">=", "in", "not in",
-       "is_null", "is_not_null")
 
-
-def _decode_stat(raw: bytes | None, ptype: int, conv: int | None,
-                 scale: int = 0):
+def _decode_stat(raw: bytes | None, elem: dict):
+    """One min/max stat of a column with schema element ``elem``."""
     if raw is None:
         return None
+    ptype, conv = elem["type"], elem.get("converted_type")
+    scale = elem.get("scale") or 0
     if ptype == Type.INT32:
         # UINT_32 stats are stored as reinterpreted bits in UNSIGNED order
         fmt = "<I" if conv == ConvertedType.UINT_32 else "<i"
@@ -77,9 +78,15 @@ def _decode_stat(raw: bytes | None, ptype: int, conv: int | None,
     return None
 
 
-def _coerce_partition_value(raw: str) -> Any:
+def _coerce_partition_value(raw: str, meta=None) -> Any:
     """int -> float -> bool -> str, the reference's ``val_to_num``
-    semantics (fastparquet/util.py:59-95; timestamps out of scope)."""
+    semantics (fastparquet/util.py:59-95; timestamps out of scope).  A
+    pandas partition ``meta`` dict of a string type keeps the raw
+    text."""
+    if meta:
+        t = str(meta.get("numpy_type") or meta.get("pandas_type") or "")
+        if t.startswith(("object", "str", "unicode", "bytes")):
+            return raw
     for conv in (int, float):
         try:
             return conv(raw)
@@ -113,18 +120,21 @@ def detect_scheme(rel_paths: list[str]) -> str:
     return "drill"
 
 
-def _partition_values(rel_path: str, scheme: str = "hive") -> dict[str, Any]:
+def _partition_values(rel_path: str, scheme: str = "hive",
+                      meta: dict | None = None) -> dict[str, Any]:
     """Parse one file's partition path segments into {col: value}
     (the reference's partition parsing, fastparquet/api.py:700-758).
     Hive values are URL-unescaped; both schemes coerce via
-    :func:`_coerce_partition_value`."""
+    :func:`_coerce_partition_value`, honoring the per-column pandas
+    partition ``meta``."""
     from urllib.parse import unquote
 
+    meta = meta or {}
     out: dict[str, Any] = {}
     segs = rel_path.split("/")[:-1]
     if scheme == "drill":
         for i, seg in enumerate(segs):
-            out[f"dir{i}"] = _coerce_partition_value(seg)
+            out[f"dir{i}"] = _coerce_partition_value(seg, meta.get(f"dir{i}"))
         return out
     for seg in segs:
         if "=" not in seg:
@@ -133,7 +143,7 @@ def _partition_values(rel_path: str, scheme: str = "hive") -> dict[str, Any]:
         if raw == "__HIVE_DEFAULT_PARTITION__":
             out[k] = None
             continue
-        out[k] = _coerce_partition_value(unquote(raw))
+        out[k] = _coerce_partition_value(unquote(raw), meta.get(k))
     return out
 
 
@@ -488,36 +498,33 @@ def drop_generations(out_dir: str, keep_from: int, fs=None) -> dict:
             "kept_generations": [g for g in gens if g >= keep_from]}
 
 
+def _rg_stats(rg: dict, elems: dict) -> dict[str, tuple]:
+    """{col: (min, max, nulls, nvals)} of one row group's footer stats."""
+    cols: dict[str, tuple] = {}
+    for cc in rg["columns"]:
+        cmd = cc["meta_data"]
+        name = ".".join(cmd["path_in_schema"])
+        elem = elems.get(name)
+        if elem is None:
+            continue  # leaf the schema walk couldn't place
+        st = cmd.get("statistics") or {}
+        cols[name] = (_decode_stat(st.get("min_value") or st.get("min"), elem),
+                      _decode_stat(st.get("max_value") or st.get("max"), elem),
+                      st.get("null_count"), cmd["num_values"])
+    return cols
+
+
 def _iter_chunks(metas):
     """Yield (file, rg_index, {col: (min,max,nulls,nvals)}) per row group.
 
-    Hive partition values appear as pseudo-stats columns with
-    min == max == value (and null_count == nvals for the default
-    partition), so stats pruning covers them with no extra code path."""
+    Hive partition values appear as constant pseudo-stats columns, so
+    stats pruning covers them with no extra code path."""
     for m in metas:
         elems = _leaf_elems(m["fmd"]["schema"])
         for ri, rg in enumerate(m["fmd"]["row_groups"]):
-            cols: dict[str, tuple] = {}
-            for cc in rg["columns"]:
-                cmd = cc["meta_data"]
-                path = cmd["path_in_schema"]
-                name = ".".join(path)
-                elem = elems.get(name)
-                if elem is None:
-                    continue  # leaf the schema walk couldn't place
-                st = cmd.get("statistics") or {}
-                lo = _decode_stat(st.get("min_value") or st.get("min"),
-                                  elem["type"], elem.get("converted_type"),
-                                  elem.get("scale") or 0)
-                hi = _decode_stat(st.get("max_value") or st.get("max"),
-                                  elem["type"], elem.get("converted_type"),
-                                  elem.get("scale") or 0)
-                cols[name] = (lo, hi, st.get("null_count"), cmd["num_values"])
+            cols = _rg_stats(rg, elems)
             for name, v in (m.get("partitions") or {}).items():
-                nvals = rg["num_rows"]
-                cols.setdefault(
-                    name,
-                    (v, v, nvals if v is None else 0, nvals))
+                cols.setdefault(name, constant_stats(v, rg["num_rows"]))
             yield m["file"], ri, cols, rg["num_rows"]
 
 
@@ -566,43 +573,6 @@ def sorted_columns(out_dir: str, fs=None) -> list[str]:
                 continue
             last[name] = hi
     return sorted(n for n, good in ok.items() if good)
-
-
-def _chunk_may_match(cols, clause) -> bool:
-    """Can any row in this chunk satisfy the AND-clause? (conservative)"""
-    for col, op, val in clause:
-        if col not in cols:
-            continue
-        lo, hi, nulls, nvals = cols[col]
-        # null-count ops evaluate without min/max
-        if op == "is_null" and nulls == 0:
-            return False
-        if op == "is_not_null" and nulls is not None and nulls == nvals:
-            return False
-        if op in ("is_null", "is_not_null"):
-            continue
-        if lo is None or hi is None:
-            continue  # no stats -> cannot prune
-        try:
-            if op in ("==", "=") and not (lo <= val <= hi):
-                return False
-            if op == ">" and not (hi > val):
-                return False
-            if op == ">=" and not (hi >= val):
-                return False
-            if op == "<" and not (lo < val):
-                return False
-            if op == "<=" and not (lo <= val):
-                return False
-            if op == "in" and not any(lo <= v <= hi for v in val):
-                return False
-            if op == "!=" and lo == hi == val:
-                return False
-            if op == "not in" and lo == hi and lo in val:
-                return False
-        except TypeError:
-            continue  # incomparable stat/filter types -> cannot prune
-    return True
 
 
 def read_page_index(path: str, fs=None,
@@ -656,16 +626,11 @@ def read_page_index(path: str, fs=None,
 
 def filter_pages(path: str, filters, fs=None) -> list[tuple[int, int, int]]:
     """PAGE-level pruning from the ColumnIndex (the tier below
-    filter_row_groups): returns surviving ``(row_group, first_row,
-    n_rows)`` row ranges for a DNF filter — a flat AND-list
-    ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]`` (the
-    reference's filter contract, fastparquet/api.py:948).  Metadata-only
-    — footer + index spans, no data pages touched.  Chunks without an
-    index keep all their pages (conservative)."""
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if not filters:
-        filters = [[]]  # match-all (None/[] must not crash or drop rows)
+    filter_row_groups): surviving ``(row_group, first_row, n_rows)``
+    row ranges for a DNF filter.  Metadata-only — footer + index spans,
+    no data pages touched.  Chunks without an index keep all their
+    pages."""
+    clauses = dnf(filters)
     fs = get_fs(path, fs)
     from fastparquet_spark.io import fetch_footers
 
@@ -673,7 +638,7 @@ def filter_pages(path: str, filters, fs=None) -> list[tuple[int, int, int]]:
     idx = read_page_index(path, fs=fs, fmd=fmd)
     out = []
     for ri, rg in enumerate(fmd["row_groups"]):
-        grid, keep_mask = _page_keep_mask_dnf(fmd, idx, ri, filters)
+        grid, keep_mask = _page_keep_mask_dnf(fmd, idx, ri, clauses)
         if keep_mask is None:
             out.append((ri, 0, rg["num_rows"]))
             continue
@@ -702,6 +667,21 @@ def _page_keep_mask_dnf(fmd: dict, idx, ri: int, clauses):
     return grid, combined
 
 
+def _page_stats(ci: dict, elem: dict, pi: int, rows: int) -> tuple:
+    """(min, max, nulls, nvals) of page ``pi`` from its ColumnIndex.  A
+    null page is all-null.  Otherwise the value count is unknown (a
+    repeated column's null count is in values, not rows), and a b""
+    bound — spec-invalid, but foreign writers emit it for non-null
+    pages — is no bound rather than a decode crash or a "" lower bound
+    that silently prunes (ADVICE r4)."""
+    if ci["null_pages"][pi]:
+        return (None, None, rows, rows)
+    nulls = ci.get("null_counts")
+    return (_decode_stat(ci["min_values"][pi] or None, elem),
+            _decode_stat(ci["max_values"][pi] or None, elem),
+            nulls[pi] if nulls else None, None)
+
+
 def _page_keep_mask(fmd: dict, idx, ri: int, clause):
     """(page grid, keep mask) for one row group under an AND-clause, or
     (None, None) when no aligned ColumnIndex can discriminate.  Page
@@ -709,64 +689,37 @@ def _page_keep_mask(fmd: dict, idx, ri: int, clause):
     uniform — the first indexed filter column fixes the grid."""
     elems = _leaf_elems(fmd["schema"])
     rg = fmd["row_groups"][ri]
-    names = [".".join(cc["meta_data"]["path_in_schema"])
-             for cc in rg["columns"]]
-    keep_mask = None
-    grid = None
-    for col, op, val in clause:
-        if col not in names:
-            continue
-        ci = idx[ri][names.index(col)]
+    pos = {".".join(cc["meta_data"]["path_in_schema"]): cii
+           for cii, cc in enumerate(rg["columns"])}
+    grid, indexed = None, {}
+    for col, _op, _val in clause:
+        ci = idx[ri][pos[col]] if col in pos else None
         if ci is None or ci.get("min_values") is None:
             continue
-        locs = ci["locations"]
-        firsts = [loc["first_row_index"] for loc in locs]
+        firsts = [loc["first_row_index"] for loc in ci["locations"]]
         if grid is None:
             grid = firsts
         elif firsts != grid:
             continue  # unaligned page grids: skip this column
-        elem = elems.get(col)
-        mask = []
-        for pi in range(len(locs)):
-            if ci["null_pages"][pi]:
-                mask.append(op == "is_null")
-                continue
-            if not ci["min_values"][pi] or not ci["max_values"][pi]:
-                # a foreign writer may emit b"" bounds for a non-null
-                # page (spec-invalid but seen in the wild); treat as
-                # no-stats and keep the page rather than decode-crash or
-                # silently prune a "" lower bound (ADVICE r4)
-                mask.append(True)
-                continue
-            lo = _decode_stat(ci["min_values"][pi], elem["type"],
-                              elem.get("converted_type"),
-                              elem.get("scale") or 0)
-            hi = _decode_stat(ci["max_values"][pi], elem["type"],
-                              elem.get("converted_type"),
-                              elem.get("scale") or 0)
-            nulls = (ci.get("null_counts") or [None] * len(locs))[pi]
-            cols = {col: (lo, hi, nulls, None)}
-            mask.append(_chunk_may_match(cols, [(col, op, val)]))
-        keep_mask = mask if keep_mask is None else \
-            [a and b for a, b in zip(keep_mask, mask)]
-    if keep_mask is None:
+        indexed[col] = ci
+    if grid is None:
         return None, None
-    return grid, keep_mask
+    ends = grid[1:] + [rg["num_rows"]]
+    return grid, [
+        may_match({col: _page_stats(ci, elems[col], pi, ends[pi] - first)
+                   for col, ci in indexed.items()}, clause)
+        for pi, first in enumerate(grid)]
 
 
 def read_pages(path: str, filters, columns=None, fs=None,
                exact: bool = False, row_groups=None):
     """PAGE-SKIPPING read: decode only the pages a ColumnIndex cannot
-    rule out for a DNF filter (AND-list or OR-of-ANDs, the reference's
-    filter contract) — the reader-side completion of
+    rule out for a DNF filter — the reader-side completion of
     :func:`filter_pages` (which is metadata-only).  Returns a pyarrow
-    Table of the SURVIVING PAGES' rows (a page-granular superset of the
-    exact matches — the same contract as row-group pruning: pruning is
-    IO savings, exactness is the caller's residual filter).  With
-    ``exact=True`` the residual predicate is applied in Arrow compute
-    before returning — the reference's ``to_pandas(filters=...,
-    row_filter=True)`` contract (fastparquet/api.py:276-331) on the
-    page-pruned superset.
+    Table of the SURVIVING PAGES' rows, a page-granular superset of the
+    matches; ``exact=True`` applies the residual predicate in Arrow
+    compute, the reference's ``to_pandas(filters=..., row_filter=True)``
+    contract (fastparquet/api.py:276-331).
 
     Bytes moved = footer + index spans + dictionary pages + kept pages
     ONLY (one ranged read per span through the fs seam) — proven by
@@ -786,11 +739,7 @@ def read_pages(path: str, filters, columns=None, fs=None,
         _to_arrow,
     )
 
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if not filters:
-        filters = [[]]  # match-all (None/[] must not crash or drop rows)
-    clauses = filters
+    clauses = dnf(filters)
     fs = get_fs(path, fs)
     src = _ByteSource(path, fs=fs)
     try:
@@ -890,67 +839,10 @@ def read_pages(path: str, filters, columns=None, fs=None,
                 names=project)
         out = pa.concat_tables(pieces)
         if exact:
-            out = _apply_row_filter_dnf(out, clauses).select(project)
+            out = arrow_filter(out, clauses).select(project)
         return out
     finally:
         src.close()
-
-
-def _apply_row_filter_dnf(table, clauses):
-    """DNF residual: OR of the per-clause AND masks."""
-    import pyarrow as pa
-
-    if len(clauses) == 1:
-        return _apply_row_filter(table, clauses[0])
-    import numpy as np
-
-    keep = None
-    for clause in clauses:
-        m = np.zeros(table.num_rows, dtype=bool)
-        idx = _apply_row_filter(
-            table.append_column("__row__", pa.array(range(table.num_rows))),
-            clause).column("__row__").to_numpy(zero_copy_only=False)
-        m[idx] = True
-        keep = m if keep is None else (keep | m)
-    return table.filter(pa.array(keep))
-
-
-def _apply_row_filter(table, clause):
-    """AND-clause as an Arrow compute mask (the residual row predicate
-    behind read_pages(exact=True))."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, op, val in clause:
-        if col not in table.column_names:
-            continue
-        c = table.column(col)
-        if op in ("==", "="):
-            m = pc.equal(c, val)
-        elif op == "!=":
-            m = pc.not_equal(c, val)
-        elif op == "<":
-            m = pc.less(c, val)
-        elif op == "<=":
-            m = pc.less_equal(c, val)
-        elif op == ">":
-            m = pc.greater(c, val)
-        elif op == ">=":
-            m = pc.greater_equal(c, val)
-        elif op == "in":
-            m = pc.is_in(c, value_set=pa.array(list(val)))
-        elif op == "not in":
-            m = pc.invert(pc.is_in(c, value_set=pa.array(list(val))))
-        elif op == "is_null":
-            m = pc.is_null(c)
-        elif op == "is_not_null":
-            m = pc.is_valid(c)
-        else:
-            continue
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.and_(mask, m)
-    return table.filter(mask) if mask is not None else table
 
 
 def _parse_bloom_blob(blob: bytes, path: str, offset: int, fs):
@@ -1053,18 +945,10 @@ def _bloom_terms(rg: dict, elems: dict, clause):
     by_name = {".".join(cc["meta_data"]["path_in_schema"]): cc["meta_data"]
                for cc in rg["columns"]}
     out = []
-    for col, op, val in clause:
+    for col, vals in point_terms(clause):
         cmd = by_name.get(col)
-        if cmd is None or "bloom_filter_offset" not in cmd:
-            continue
-        if op in ("==", "="):
-            vals = [val]
-        elif op == "in":
-            vals = list(val)
-        else:
-            continue
         elem = elems.get(col)
-        if elem is None:
+        if cmd is None or elem is None or "bloom_filter_offset" not in cmd:
             continue
         encoded = [_bloom_value_bytes(v, elem) for v in vals]
         if any(e is None for e in encoded):
@@ -1124,22 +1008,19 @@ def _prefetch_blooms(spans: dict, fs, max_workers: int = 16) -> dict:
 
 def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
                       use_bloom: bool = True) -> list[tuple[str, int]]:
-    """Surviving (file, row_group) pairs for a DNF filter — a flat
-    AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]``.
+    """Surviving (file, row_group) pairs for a DNF filter.
 
     Two pruning passes: min/max/null stats (metadata already in hand),
     then — for ==/in clauses on columns carrying a bloom filter —
     a split-block bloom membership check (one small ranged read per
     surviving chunk; the high-cardinality point-lookup path where
     stats cannot discriminate)."""
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    for clause in filters:
-        for col, op, _v in clause:
-            if op not in OPS:
-                raise ValueError(f"unsupported filter op {op!r}")
+    filters = dnf(filters)
     if metas is None:
         metas = dataset_metadata(out_dir, fs=fs)
+    if match_all(filters):
+        return [(m["file"], ri) for m in metas
+                for ri in range(len(m["fmd"]["row_groups"]))]
     by_file = {m["file"]: m for m in metas}
     root = out_dir.rstrip("/")
     # glob inputs record basenames, so the bloom's file path can't be
@@ -1148,7 +1029,7 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     # pass 1: min/max/null stats (metadata already in hand)
     survivors = []
     for f, ri, cols, _n in _iter_chunks(metas):
-        clauses = [c for c in filters if _chunk_may_match(cols, c)]
+        clauses = [c for c in filters if may_match(cols, c)]
         if clauses:
             survivors.append((f, ri, clauses))
     if not use_bloom:
@@ -1234,16 +1115,11 @@ def filtered_read(spark, out_dir: str, filters):
     exact residual predicate applied on top.  Hive partition columns come
     from Spark's own discovery (basePath); drill ``dirN`` columns are
     attached from the file path."""
-    from pyspark.sql import functions as F
-
+    clauses = dnf(filters)
     metas = dataset_metadata(out_dir)
     drill = bool(metas and "dir0" in (metas[0].get("partitions") or {}))
-    if not filters:
-        # no filters = FULL scan; an empty list must not read as an
-        # empty DNF (zero branches -> zero rows)
-        filters = [[]]
     keep_files = sorted({f for f, _ri in
-                         filter_row_groups(out_dir, filters, metas=metas)})
+                         filter_row_groups(out_dir, clauses, metas=metas)})
     if not keep_files:
         # empty scan with the right schema (partition cols included)
         if drill:
@@ -1255,21 +1131,5 @@ def filtered_read(spark, out_dir: str, filters):
           .parquet(*[os.path.join(out_dir, f) for f in keep_files]))
     if drill:
         df = _attach_drill_columns(df, metas)
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if any(not clause for clause in filters):
-        return df  # a match-all DNF branch makes the whole OR true
-    ors = None
-    for clause in filters:
-        ands = None
-        for col, op, val in clause:
-            c = F.col(col)
-            e = {"==": c == val, "=": c == val, "!=": c != val,
-                 "<": c < val, "<=": c <= val, ">": c > val, ">=": c >= val,
-                 "in": c.isin(*val) if isinstance(val, (list, tuple, set)) else c.isin(val),
-                 "not in": ~c.isin(*val) if isinstance(val, (list, tuple, set)) else ~c.isin(val),
-                 "is_null": c.isNull(), "is_not_null": c.isNotNull(),
-                 }[op]
-            ands = e if ands is None else (ands & e)
-        ors = ands if ors is None else (ors | ands)
-    return df.filter(ors) if ors is not None else df
+    cond = spark_column(clauses)
+    return df if cond is None else df.filter(cond)

@@ -8,7 +8,8 @@ pruning stack instead of hand-built DNF filters:
 is the idiomatic spelling of ``engine.scan_job.paged_read``:
 
 1. ``pushFilters`` receives Catalyst's translated predicates and keeps
-   the comparison/null/in terms as one DNF AND-clause;
+   the ones the filter contract expresses (format/predicate.py) as one
+   AND-clause;
 2. ``partitions()`` (driver, metadata-only) runs row-group stats +
    bloom pruning (``filter_row_groups`` — sidecar-aware footer fetch,
    concurrent bloom probes; hive partition values prune whole files as
@@ -151,24 +152,13 @@ class FpsReader(DataSourceReader):
         return state
 
     def pushFilters(self, filters):
-        """Catalyst -> DNF translation.  Spark hands the conjunction of
-        the query's source-level predicates; the comparison / null / IN
-        terms become ONE AND-clause for the pruning stack.  ALL filters
-        are returned (unsupported), so Spark re-applies the exact
-        predicate over the page-granular superset we yield."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
-            IsNull, LessThan, LessThanOrEqual,
-        )
+        """Keep the pushed filters as one AND-clause for the pruning
+        stack.  ALL filters are returned (unsupported), so Spark
+        re-applies the exact predicate over the page-granular superset
+        we yield."""
+        from fastparquet_spark.format.predicate import from_catalyst
 
-        ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
-               LessThan: "<", LessThanOrEqual: "<=", In: "in",
-               IsNull: "is_null", IsNotNull: "is_not_null"}
-        for f in filters:
-            op = ops.get(type(f))
-            if op is not None and len(f.attribute) == 1:
-                val = getattr(f, "value", None)  # In.value is a tuple
-                self._clauses.append((f.attribute[0], op, val))
+        self._clauses.extend(from_catalyst(filters))
         return filters
 
     def partitions(self):
@@ -187,12 +177,7 @@ class FpsReader(DataSourceReader):
         root, metas = self._plan or load_dataset_metas(self.path)
         (file_cols, part_cols, drop_cols, aschema, names_all, present,
          ptypes) = _result_columns(metas, self.columns)
-        filters = [self._clauses] if self._clauses else None
-        if filters:
-            survivors = filter_row_groups(root, filters, metas=metas)
-        else:
-            survivors = [(m["file"], ri) for m in metas
-                         for ri in range(len(m["fmd"]["row_groups"]))]
+        survivors = filter_row_groups(root, self._clauses, metas=metas)
         by_file: dict[str, list[int]] = {}
         for f, ri in survivors:
             by_file.setdefault(f, []).append(ri)
@@ -215,12 +200,12 @@ class FpsReader(DataSourceReader):
         import pyarrow as pa
 
         from fastparquet_spark.engine.scan_job import scan_unit_batches
+        from fastparquet_spark.format.predicate import dnf
 
         pa.set_cpu_count(1)
         header, units = partition.value
         aschema = pa.ipc.read_schema(pa.py_buffer(header["schema"]))
-        # [[]] is the match-all DNF (an empty list would mean NO branch)
-        clauses = [list(header["clauses"])] if header["clauses"] else [[]]
+        clauses = dnf(header["clauses"])
         for path, ris, pvals, absent, fallback in units:
             # streaming: match-all units decode batch-by-batch through
             # pyarrow's C++ reader, overlapping decode with the Arrow

@@ -85,24 +85,13 @@ class FpscReader(DataSourceReader):
         self._clauses: list[tuple] = []
 
     def pushFilters(self, filters):
-        """Record comparison filters for FILE-LEVEL pruning against the
-        container footers' min/max stats.  Everything is returned as
-        unsupported — pruning here is conservative (whole files that
-        cannot match), Spark still applies the exact row predicate."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
-            IsNull, LessThan, LessThanOrEqual,
-        )
+        """Record the pushed filters for FILE-LEVEL pruning against the
+        container footers' stats and blooms.  Everything is returned as
+        unsupported: Spark still applies the exact row predicate."""
+        from fastparquet_spark.format.predicate import from_catalyst
 
-        ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
-               LessThan: "<", LessThanOrEqual: "<=", In: "in",
-               IsNull: "is_null", IsNotNull: "is_not_null"}
-        for f in filters:
-            op = ops.get(type(f))
-            if op is not None and len(f.attribute) == 1:
-                self._clauses.append(
-                    (f.attribute[0], op, getattr(f, "value", None)))
-        return filters  # Spark keeps responsibility for exactness
+        self._clauses.extend(from_catalyst(filters))
+        return filters
 
     def partitions(self):
         files = _list_fpsc(self.path)
@@ -110,12 +99,10 @@ class FpscReader(DataSourceReader):
             return [InputPartition(p) for p in files]
         from concurrent.futures import ThreadPoolExecutor
 
-        from fastparquet_spark.format.container import read_container_footer
-        from fastparquet_spark.format.dataset import _chunk_may_match
-
         from fastparquet_spark.format.container import (
-            container_bloom_rules_out,
+            container_bloom_rules_out, read_container_footer,
         )
+        from fastparquet_spark.format.predicate import may_match
 
         with ThreadPoolExecutor(max_workers=min(16, max(len(files), 1))) as ex:
             metas = list(ex.map(read_container_footer, files))
@@ -124,7 +111,7 @@ class FpscReader(DataSourceReader):
                 cols = {cm["name"]: (cm.get("min"), cm.get("max"),
                                      cm.get("null_count"), cm.get("n"))
                         for cm in meta["columns"]}
-                if _chunk_may_match(cols, self._clauses):
+                if may_match(cols, self._clauses):
                     stat_kept.append((p, meta))
             # second tier: container bloom probes for ==/in point
             # predicates stats can't discriminate — CONCURRENT ranged

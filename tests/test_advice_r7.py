@@ -24,9 +24,7 @@ from fastparquet_spark import api
 
 def test_masked_int64_above_2_53_exact(tmp_path):
     big = 4611686018427400249  # not representable in float64
-    df = pd.DataFrame({"a": pd.array([big, None, 7], dtype="Int64"),
-                       "u": pd.array([2 ** 63 + 11, None], dtype="UInt64")[
-                           [0, 1, 1]].tolist()})
+    df = pd.DataFrame({"a": pd.array([big, None, 7], dtype="Int64")})
     df["u"] = pd.array([2 ** 63 + 11, None, 3], dtype="UInt64")
     p = os.path.join(tmp_path, "m.parquet")
     api.write(p, df)
@@ -50,6 +48,12 @@ def test_nat_sentinel_under_has_nulls_false(tmp_path):
     assert pd.isna(back["t"][1])
     assert back["td"][0] == pd.to_timedelta(1234567, unit="us")
     assert pd.isna(back["td"][1])
+    # int96 stores ns, so the sentinel is stamped in ns, not us
+    p96 = os.path.join(tmp_path, "n96.parquet")
+    api.write(p96, df[["t"]], has_nulls=False, times="int96")
+    back96 = api.ParquetFile(p96).to_pandas()
+    assert back96["t"][0] == pd.Timestamp("2020-01-02 03:04:05.123456")
+    assert pd.isna(back96["t"][1])
 
 
 def test_sub_us_timedelta_truncates_like_reference(tmp_path):

@@ -782,6 +782,26 @@ def test_filter_out_stats_and_cats(tmp_path):
     assert filter_out_cats(rg, [("lang", "not in", ["py"])])
     assert not filter_out_cats(rg, [("other", "==", 1)])
     assert not filter_out_cats(rg, [])
+    # the hive null partition matches only is_null; a valued one never
+    nul = {"num_rows": 10, "columns": [
+        {"file_path": "k=__HIVE_DEFAULT_PARTITION__/part-0.parquet"}]}
+    three = {"num_rows": 10, "columns": [{"file_path": "k=3/part-0.parquet"}]}
+    assert filter_out_cats(nul, [("k", "==", 5)])
+    assert filter_out_cats(nul, [("k", "is_not_null", None)])
+    assert not filter_out_cats(nul, [("k", "is_null", None)])
+    assert filter_out_cats(three, [("k", "is_null", None)])
+    # an all-null chunk holds is_null matches; incomparable in-values
+    # keep the group rather than raise
+    p2 = str(tmp_path / "n.parquet")
+    write(p2, pd.DataFrame({"x": pd.array([None] * 4, dtype="Int64"),
+                            "y": np.arange(1, 5, dtype=np.int64)}))
+    fmd2 = ParquetFile(p2)._metas[0]["fmd"]
+    rg2 = fmd2["row_groups"][0]
+    assert not filter_out_stats(rg2, [("x", "is_null", None)],
+                                fmd2["schema"])
+    assert filter_out_stats(rg2, [("x", "==", 1)], fmd2["schema"])
+    assert not filter_out_stats(rg2, [("y", "in", ["a", 5])],
+                                fmd2["schema"])
 
 
 def test_paths_to_cats():

@@ -17,6 +17,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from fastparquet_spark.format import read_file, write_file
 from fastparquet_spark.format.dataset import filter_pages, read_page_index
@@ -85,6 +86,13 @@ def test_filter_pages_prunes_to_one_page(tmp_path):
     # unindexed predicate keeps whole row groups (conservative)
     un = filter_pages(path, [("lang", "==", "py")])
     assert sum(nr for _ri, _fr, nr in un) == 50_000
+    # an unknown op is an error, never a silent match-all
+    from fastparquet_spark.format.dataset import read_pages
+
+    with pytest.raises(ValueError, match="unsupported filter op"):
+        filter_pages(path, [("k", "=>", 5)])
+    with pytest.raises(ValueError, match="unsupported filter op"):
+        read_pages(path, [("k", "=>", 5)], exact=True)
 
 
 def test_parses_pyarrow_page_index(tmp_path):
@@ -295,6 +303,8 @@ def test_dnf_filters_through_pages_and_paged_read(spark, tmp_path):
         t = pa.table({
             "k": pa.array(range(i * n, (i + 1) * n)),
             "f": pa.array(np.arange(n, dtype=np.float64)),
+            "m": pa.array([None if j % 3 == 0 else j % 4 for j in range(n)],
+                          pa.int64()),
         })
         write_file(str(d / f"part-{i}.parquet"), t, compression="ZSTD",
                    row_group_rows=3_000, page_rows=1_000)
@@ -310,6 +320,28 @@ def test_dnf_filters_through_pages_and_paged_read(spark, tmp_path):
     # distributed: only files 0 and 2 survive row-group pruning
     got = sorted(r["k"] for r in paged_read(spark, str(d), dnf).collect())
     assert got == list(range(500)) + list(range(17_200, 18_000))
+    # "not in" on a nullable column: null rows never match (SQL null
+    # logic) in any reader — every one returns exactly DuckDB's rows
+    import glob
+
+    import duckdb
+
+    from fastparquet_spark.api import ParquetFile
+    from fastparquet_spark.format.dataset import filtered_read
+
+    flt = [("m", "not in", [1])]
+    want = sorted(r[0] for r in duckdb.sql(
+        f"SELECT k FROM '{d}/*.parquet' WHERE m NOT IN (1)").fetchall())
+    assert sorted(r["k"] for r in paged_read(spark, str(d), flt).collect()) \
+        == want
+    direct = []
+    for p in sorted(glob.glob(f"{d}/part-*.parquet")):
+        direct += read_pages(p, flt, exact=True).column("k").to_pylist()
+    assert sorted(direct) == want
+    pf = ParquetFile(str(d))
+    assert sorted(pf.to_pandas(filters=flt, row_filter=True)["k"]) == want
+    assert sorted(r["k"] for r in filtered_read(spark, str(d), flt)
+                  .collect()) == want
 
 
 def test_paged_read_hive_partitions(spark, tmp_path):
@@ -411,19 +443,36 @@ def test_paged_read_empty_filters_scans_all(spark, tmp_path):
 
 
 def test_read_pages_fuzz_vs_pyarrow_compute():
-    """Property fuzz: random tables, page sizes and predicates —
-    read_pages(exact=True) must equal a full-table Arrow compute
-    filter, regardless of which pages the index prunes."""
+    """Property fuzz: random tables, page sizes and predicates over the
+    full op set — read_pages(exact=True) must equal a row-by-row oracle
+    with SQL null semantics, regardless of which pages the index
+    prunes, and neither filter_out_stats nor filter_pages may drop a
+    row group or page that holds a matching row."""
+    import math
+    import operator
     import tempfile
 
-    import pyarrow.compute as pc
-
+    from fastparquet_spark.api import filter_out_stats
     from fastparquet_spark.format.dataset import read_pages
+    from fastparquet_spark.format.reader import read_footer
 
     rng = np.random.default_rng(11)
-    OPS = {"==": pc.equal, "!=": pc.not_equal, "<": pc.less,
-           "<=": pc.less_equal, ">": pc.greater, ">=": pc.greater_equal}
-    for trial in range(12):
+    OPS = {"==": operator.eq, "!=": operator.ne, "<": operator.lt,
+           "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+           "in": None, "not in": None, "is_null": None, "is_not_null": None}
+
+    def holds(x, o, v):
+        if o in ("is_null", "is_not_null"):
+            return (x is None) == (o == "is_null")
+        if x is None:
+            return False  # SQL: every other op on null is unknown
+        if o == "in":
+            return x in v
+        if o == "not in":
+            return x not in v
+        return OPS[o](x, v)
+
+    for trial in range(24):
         n = int(rng.integers(50, 4_000))
         sortedness = rng.random()
         k = np.sort(rng.integers(0, n, n)) if sortedness > 0.5 \
@@ -446,31 +495,28 @@ def test_read_pages_fuzz_vs_pyarrow_compute():
         # random single-term and two-term AND/OR predicates
         col = str(rng.choice(["k", "f", "s", "m"]))
         op = str(rng.choice(list(OPS)))
-        val = {"k": int(rng.integers(0, n)),
-               "f": float(rng.normal(0, 100)),
-               "s": f"w{int(rng.integers(0, 37))}",
-               "m": int(rng.integers(0, n))}[col]
+
+        def draw():
+            return {"k": int(rng.integers(0, n)),
+                    "f": float(rng.normal(0, 100)),
+                    "s": f"w{int(rng.integers(0, 37))}",
+                    "m": int(rng.integers(0, n))}[col]
+
+        val = [draw() for _ in range(int(rng.integers(1, 4)))] \
+            if op in ("in", "not in") else draw()
         clause = [(col, op, val)]
         if trial % 2:
             clause.append(("k", "<", int(rng.integers(1, n + 1))))
         filters = [clause] if trial % 4 != 3 else \
             [clause, [("k", ">=", int(rng.integers(0, n)))]]
         got = read_pages(path, filters, exact=True)
-        # oracle: full table + Arrow mask with identical semantics
-        mask = None
-        for cl in (filters if isinstance(filters[0], list) else [filters]):
-            m = None
-            for c, o, v in cl:
-                t_ = OPS[o](t.column(c), v)
-                t_ = pc.fill_null(t_, False)
-                m = t_ if m is None else pc.and_(m, t_)
-            if m is None:
-                m = pa.array([True] * n)
-            mask = m if mask is None else pc.or_(mask, m)
-        want = t.filter(mask)
+        rows = t.to_pylist()
+        match = [[all(holds(r[c], o, v) for c, o, v in cl) for r in rows]
+                 for cl in filters]
+        keep = [any(ms) for ms in zip(*match)]
+        want = t.filter(pa.array(keep))
         assert got.num_rows == want.num_rows, \
             (trial, filters, got.num_rows, want.num_rows)
-        import math
 
         def norm(vals):
             return sorted(("NaN" if isinstance(v, float) and math.isnan(v)
@@ -479,3 +525,16 @@ def test_read_pages_fuzz_vs_pyarrow_compute():
         for c in t.column_names:
             assert norm(got.column(c).to_pylist()) == \
                 norm(want.column(c).to_pylist()), (trial, filters, c)
+        # pruning is conservative: no matching row is ever dropped
+        with open(path, "rb") as fh:
+            fmd = read_footer(fh.read())
+        starts = np.cumsum([0] + [rg["num_rows"] for rg in fmd["row_groups"]])
+        for ri, rg in enumerate(fmd["row_groups"]):
+            for cl, ms in zip(filters, match):
+                if any(ms[starts[ri]:starts[ri + 1]]):
+                    assert not filter_out_stats(rg, cl, fmd["schema"]), \
+                        (trial, cl, ri)
+        paged = np.zeros(n, dtype=bool)
+        for ri, first, nr in filter_pages(path, filters):
+            paged[starts[ri] + first:starts[ri] + first + nr] = True
+        assert paged[np.array(keep)].all(), (trial, filters)
