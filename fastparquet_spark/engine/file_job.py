@@ -4,12 +4,11 @@
 shuffling rows; that is correct when re-clustering is required, but at
 100 TB you move the PLAN, not the data.  This job distributes
 (file, row-group) SPLITS: the driver reads only footers, packs row
-groups into tasks, and each executor-side Python worker reads its
-split directly with pyarrow's C++ parquet reader and runs the codec
-kernels — bytes never cross the JVM/Python boundary, so throughput
-scales with cores instead of saturating the Arrow IPC channel
-(measured: the mapInArrow stream caps at ~0.45 GB/s on 32 local cores,
-while pyarrow scans + kernels run per-core).
+groups into splits, and each task's Python worker reads its split
+directly with pyarrow's C++ parquet reader and runs the codec kernels —
+source bytes never cross the JVM/Python boundary, so throughput scales
+with cores instead of with the ``mapInArrow`` Arrow-IPC stream the
+shuffle path feeds its workers through.
 
 Skew handling here is plan-time: a mega-file contributes one split per
 row group, so no task exceeds the row-group budget regardless of file
@@ -37,6 +36,7 @@ from fastparquet_spark.engine.commit import (
     u_join,
 )
 from fastparquet_spark.engine.fpsc_job import fpsc_writer, pretrain_fpsc
+from fastparquet_spark.engine.launch import map_units
 
 
 def _plan_split_job(input_dir: str, out_dir: str, rows_per_task: int,
@@ -110,19 +110,10 @@ def _run_splits(spark, splits: list[dict], input_dir: str, out_dir: str,
     pyarrow, written by ``make_write()`` — one ``(sink, table) ->
     {column: encoding}`` function per task — and committed as owner
     ``part-<split>``.  Returns the manifest DataFrame."""
-    if not splits:
-        return spark.createDataFrame([], manifest_struct())
-    # exactly one split per partition: hash repartition would collide
-    # splits into shared partitions and leave others empty, putting 2-3
-    # tasks on the critical path
-    rdd = spark.sparkContext.parallelize(
-        [(s["split"], s["file"], json.dumps(s["row_groups"]))
-         for s in splits], len(splits))
-    sdf = spark.createDataFrame(rdd, "split int, file string, rgs string")
     prefix = input_dir.rstrip("/") + "/"
     columns_ = list(columns) if columns else None
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def run(splits_: Iterator[dict]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -137,14 +128,15 @@ def _run_splits(spark, splits: list[dict], input_dir: str, out_dir: str,
         pa_w.set_io_thread_count(2)
         write = make_write()
 
-        def encode(att, sid, fpath, rgs_json) -> list[dict]:
+        def encode(att, split) -> list[dict]:
+            sid, fpath = split["split"], split["file"]
             fname = f"part-{sid:05d}{ext}"
             rel = fpath[len(prefix):]
             if preserve_layout and fpath.startswith(prefix) and "/" in rel:
                 fname = f"{rel.rsplit('/', 1)[0]}/{fname}"
             t0 = time.perf_counter()
             tbl = pq.ParquetFile(fpath).read_row_groups(
-                json.loads(rgs_json), columns=columns_, use_threads=False)
+                split["row_groups"], columns=columns_, use_threads=False)
             k0 = time.perf_counter()
             with att.stage(u_join(out_dir, fname)) as sink:
                 cols = write(sink, tbl)
@@ -155,15 +147,13 @@ def _run_splits(spark, splits: list[dict], input_dir: str, out_dir: str,
                      "encode_secs": now - t0, "kernel_secs": now - k0,
                      "skipped": False, "columns": json.dumps(cols)}]
 
-        for b in batches:
-            for sid, fpath, rgs_json in zip(b.column("split").to_pylist(),
-                                            b.column("file").to_pylist(),
-                                            b.column("rgs").to_pylist()):
-                att = TaskAttempt(fs, out_dir, f"part-{sid:05d}", attempt)
-                yield from run_task(att, resume, partial(
-                    encode, sid=sid, fpath=fpath, rgs_json=rgs_json))
+        for split in splits_:
+            att = TaskAttempt(fs, out_dir, f"part-{split['split']:05d}",
+                              attempt)
+            yield from run_task(att, resume, partial(encode, split=split))
 
-    return sdf.mapInArrow(run, manifest_struct())
+    # one split per task: rows_per_task already sized the work
+    return map_units(spark, splits, len(splits), run, manifest_struct())
 
 
 def _parquet_writer(**opts):

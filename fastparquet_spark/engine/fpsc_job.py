@@ -148,8 +148,7 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
+    from fastparquet_spark.engine.launch import map_units
     from fastparquet_spark.io import get_fs
 
     fs = get_fs(in_dir)
@@ -177,22 +176,15 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
     # 100k single-file tasks would be pure scheduler overhead; 4x the
     # core count keeps every executor busy with work-stealing headroom
     # while the inflate loop streams file-by-file (bounded memory)
-    n_parts = max(1, min(len(files),
-                         4 * spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize([(f,) for f in files], n_parts)
-    paths_df = spark.createDataFrame(
-        rdd, StructType([StructField("path", StringType())]))
-    columns_ = list(columns) if columns is not None else None
+    n_parts = min(len(files), 4 * spark.sparkContext.defaultParallelism)
 
-    def inflate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def inflate(paths: Iterator[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
 
         from fastparquet_spark.format.container import read_container
 
         pa_w.set_cpu_count(1)
-        for b in batches:
-            for path in b.column("path").to_pylist():
-                tbl = read_container(path, columns=columns_)
-                yield from tbl.to_batches()
+        for path in paths:
+            yield from read_container(path, columns=columns).to_batches()
 
-    return paths_df.mapInArrow(inflate, schema)
+    return map_units(spark, files, n_parts, inflate, schema)

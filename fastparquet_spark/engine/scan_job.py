@@ -321,8 +321,8 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     and dropped from the result; may include partition columns).
     """
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StringType, StructField, StructType
 
+    from fastparquet_spark.engine.launch import map_units
     from fastparquet_spark.format.dataset import (
         filter_row_groups, load_dataset_metas,
     )
@@ -374,46 +374,20 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     out_schema = from_arrow_schema(arrow_schema)
 
     root = in_dir.rstrip("/")
-    units = [(f"{root}/{f}", ",".join(map(str, ris)), json.dumps(pvals),
-              json.dumps(absent), fallback)
+    units = [(f"{root}/{f}", ris, pvals, absent, fallback)
              for f, ris, pvals, absent, fallback in build_scan_units(
                  by_file, metas, file_cols, names_all, present, ptypes)]
-    if not units:
-        return spark.createDataFrame([], out_schema)
 
-    # several files per task (read_fpsc's granularity rule): single-file
-    # tasks at 100k files are pure scheduler overhead
-    n_parts = max(1, min(len(units),
-                         4 * spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(units, n_parts)
-    paths_df = spark.createDataFrame(
-        rdd, StructType([StructField("path", StringType()),
-                         StructField("rgs", StringType()),
-                         StructField("parts", StringType()),
-                         StructField("absent", StringType()),
-                         StructField("fallback", StringType())]))
-
-    file_cols_ = list(file_cols)
-    drop_cols_ = list(drop_cols)
-    part_cols_ = list(part_cols)
-    exact_ = exact
-    arrow_schema_ = arrow_schema
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def scan(units_: Iterator[tuple]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
 
         pa_w.set_cpu_count(1)
-        for b in batches:
-            for path, rgs, pjson, absjson, fallback in zip(
-                    b.column("path").to_pylist(),
-                    b.column("rgs").to_pylist(),
-                    b.column("parts").to_pylist(),
-                    b.column("absent").to_pylist(),
-                    b.column("fallback").to_pylist()):
-                ris = [int(x) for x in rgs.split(",")] if rgs else []
-                yield from scan_unit_batches(
-                    path, ris, json.loads(pjson), json.loads(absjson),
-                    fallback, clauses, file_cols_, drop_cols_,
-                    part_cols_, arrow_schema_, exact_)
+        for path, ris, pvals, absent, fallback in units_:
+            yield from scan_unit_batches(
+                path, ris, pvals, absent, fallback, clauses, file_cols,
+                drop_cols, part_cols, arrow_schema, exact)
 
-    return paths_df.mapInArrow(scan, out_schema)
+    # several files per task (read_fpsc's granularity rule): single-file
+    # tasks at 100k files are pure scheduler overhead
+    n_parts = min(len(units), 4 * spark.sparkContext.defaultParallelism)
+    return map_units(spark, units, n_parts, scan, out_schema)

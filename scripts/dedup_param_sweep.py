@@ -49,13 +49,14 @@ def main():
 
     from fastparquet_spark.analytics import dedup
     from fastparquet_spark.analytics.registry import minhash_lsh_pairs_sql
+    from heap import driver_memory
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .appName("dedup-param-sweep")
              .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

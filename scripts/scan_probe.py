@@ -34,13 +34,14 @@ def main():
         encode_dataset, paged_read, synthetic_source_table,
     )
     from fastparquet_spark.sources import FpsDataSource
+    from heap import driver_memory
 
     spark = (SparkSession.builder.master(f"local[{CPUS}]")
              .appName("fps-scan-probe")
              .config("spark.sql.shuffle.partitions", str(CPUS))
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.python.filterPushdown.enabled", "true")
-             .config("spark.driver.memory", "24g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

@@ -52,13 +52,14 @@ def main():
 
     import __spark_entry__ as entry_mod
     from pyspark.sql import SparkSession
+    from heap import driver_memory
 
     spark = (SparkSession.builder.master("local[8]")
              .appName("registry-sweep")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.python.filterPushdown.enabled", "true")
-             .config("spark.driver.memory", "16g")
+             .config("spark.driver.memory", driver_memory())
              # the harness COLLECTS both sides for comparison — at
              # ~sf30 the signature/pair result sets pass 1 GiB
              .config("spark.driver.maxResultSize", "8g")

@@ -38,13 +38,14 @@ def main():
     from pyspark.sql import functions as F
 
     from fastparquet_spark.analytics import dedup
+    from heap import driver_memory
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .appName("validate-clusters")
              .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
